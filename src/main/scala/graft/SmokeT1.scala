@@ -1,11 +1,7 @@
 package graft
 object SmokeT1 {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions","4")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = engine.Sessions.local(4)
     val df = SparkEntry.entry(spark)
     println(s"T1_ROWS=${df.count()}")
     df.show(10, false)

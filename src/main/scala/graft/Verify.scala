@@ -2,21 +2,36 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. A third argument
+  * (comma-separated query names) restricts the dump and oracle_sql.json to
+  * those queries, so `tools/oracle_check.py` gates them in seconds instead
+  * of re-running the whole surface.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q_a,q_b,...]
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length == 2 || args.length == 3,
+      "usage: Verify <sfDir> <outDir> [q_a,q_b,...]")
+    val names = args.lift(2).toSeq.flatMap(_.split(",")).map(_.trim)
+      .filter(_.nonEmpty)
+    val spark = engine.Sessions.local()
+    dump(spark, args(0), args(1), names)
+    spark.stop()
+  }
+
+  /** Writes `<outDir>/<name>` parquet for each query in `names` (every
+    * declared query when empty), the matching `oracle_sql.json`, and
+    * `errors.json`. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      names: Seq[String]): Unit = {
+    val queries =
+      if (names.isEmpty) SparkEntry.queries
+      else names.map(n => n -> SparkEntry.queries.getOrElse(n,
+        throw new IllegalArgumentException(s"unknown query: $n")))
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries.foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -48,6 +63,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => names.isEmpty || names.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Self-describing failure record alongside the dumps (count + per-query
@@ -56,7 +72,6 @@ object Verify {
       .mkString(s"""{"n_errors": ${failed.size}, "errors": {""", ",", "}}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     if (failed.nonEmpty)
-      System.err.println(s"[verify] ${failed.size} of ${SparkEntry.queries.size} queries FAILED")
-    spark.stop()
+      System.err.println(s"[verify] ${failed.size} of ${queries.size} queries FAILED")
   }
 }

@@ -3,13 +3,16 @@ package graft.engine
 import org.apache.spark.sql.SparkSession
 
 /** Session utilities (SURVEY.md §2.A A10, pub: util.py
-  * `createLocalSparkSession`). One place pins the settings every entry
-  * point needs: UTC timezone (oracle parity), shuffle partitions sized to
-  * cores (not the 200 default — wrong for local mode, and on a real
-  * cluster you'd size to ~2-3× total executor cores).
+  * `createLocalSparkSession`). The one place a session is built, pinning
+  * the settings every entry point needs: UTC timezone (oracle parity),
+  * shuffle partitions sized to cores (not the 200 default — wrong for
+  * local mode, and on a real cluster you'd size to ~2-3× total executor
+  * cores). A caller that passes no core count gets `SPARK_GRAFT_CPUS`, else
+  * every available processor.
   */
 object Sessions {
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
+  def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors()),
       appName: String = "graft"): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
@@ -17,26 +20,6 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Cost-based-optimizer variant: CBO + join reorder read ANALYZE'd
-    * catalog statistics to pick join order and build sides without hints.
-    * Only affects catalog tables (saveAsTable + [[analyze]]); plain
-    * `read.parquet` paths still rely on size-on-disk + AQE. */
-  def localCbo(cores: Int = Runtime.getRuntime.availableProcessors(),
-      appName: String = "graft-cbo"): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -1097,7 +1097,7 @@ object EventOps {
         .agg(count(lit(1)).as("n_churned"))
       // last OBSERVED day from the joined day table itself (an active-day
       // marker + unpartitioned max over the calendar-bounded join — not a
-      // third scan of events just for max(day); ReuseAudit-measured)
+      // third scan of events just for max(day); PlanAudit-measured)
       val wAll = Window.partitionBy()
       statuses.join(churn, Seq("day"), "full_outer")
         .withColumn("dmax", max(when($"act" === 1, $"day")).over(wAll))

@@ -81,7 +81,7 @@ object Formats {
     * a typed Dataset and pushed through Multimodal.extractFeaturesWithMeta
     * (mapPartitions; bytes stay in-partition and are dropped there — the
     * 100 TB posture: one scan of the binary lake, no feature-join shuffle
-    * of the blobs; ReuseAudit flagged the earlier extractFeatures + join
+    * of the blobs; PlanAudit flagged the earlier extractFeatures + join
     * form as a double scan). Profiled per format: byte-stats off the
     * in-partition payload length, two codec-feature components the oracle
     * can recompute from the same bytes (feature[17] = payload length,

@@ -177,7 +177,7 @@ object InferOps {
         $"n".cast("double")
       // r and c ride the SAME window pass over the <=35-cell table (a
       // separate countDistinct aggregate branch re-scanned events —
-      // ReuseAudit); element order in the set is irrelevant to size()
+      // PlanAudit); element order in the set is irrelevant to size()
       cells
         .withColumn("cx", sum($"cxy").over(wx))
         .withColumn("cy", sum($"cxy").over(wy))

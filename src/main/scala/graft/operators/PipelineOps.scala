@@ -2651,7 +2651,7 @@ object PipelineOps {
     * computes digest + all five rule features; survivorship is a
     * min-over-window partitioned by the digest (bounded state per
     * digest group — the q_dedup_cascade idiom; the groupBy+join form
-    * re-scanned the union per consumer, ReuseAudit-measured);
+    * re-scanned the union per consumer, PlanAudit-measured);
     * everything collapses to a |sources|-row table (materialized once)
     * and the totals row is an explicit 1-row broadcast. */
   val qCurationBudget: GQuery = GQuery(
@@ -2687,7 +2687,7 @@ object PipelineOps {
       val scored = feat.select($"source", $"doc_id", $"th", qual.as("q"))
       // survivor flag via min-over-window on the digest (the
       // q_dedup_cascade idiom): one pass, no groupBy+self-join — the
-      // join form re-scanned the 3-way union per consumer (ReuseAudit
+      // join form re-scanned the 3-way union per consumer (PlanAudit
       // measured documents x9 in the final plan)
       val flagged = scored
         .withColumn("sv",

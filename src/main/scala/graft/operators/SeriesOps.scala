@@ -34,7 +34,7 @@ object SeriesOps {
     val ev = Tables.events(spark, dir).select(to_date($"ts").as("day"))
     val daily = ev.groupBy($"day").agg(count(lit(1)).as("n"))
     // bounds from the |days|-row aggregate — not a second events scan
-    // (ReuseAudit: the two aggregations never canonically match)
+    // (PlanAudit: the two aggregations never canonically match)
     val spine = daily.agg(min($"day").as("d0"), max($"day").as("d1"))
       .select(explode(expr("sequence(d0, d1, interval 1 day)")).as("day"))
     spine.join(daily, Seq("day"), "left_outer")

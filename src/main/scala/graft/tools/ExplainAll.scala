@@ -2,13 +2,15 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-import graft.engine.Registry
+import graft.engine.{Registry, Sessions}
 
 /** Dump formatted physical plans for headline queries → PLANS.md, the
   * reviewable record that scans prune/push down, dims broadcast, fact
-  * joins sort-merge, and top-k avoids global sorts. Run:
+  * joins sort-merge, and top-k avoids global sorts. Query names after the
+  * output file dump only those plans (before/after evidence for a plan
+  * change). Run:
   *   sbt "runMain graft.tools.ExplainAll /root/testdata/sf0.01 PLANS.md"
+  *   sbt "runMain graft.tools.ExplainAll <sfDir> before.md q_a q_b"
   */
 object ExplainAll {
   val headline = Seq(
@@ -166,33 +168,32 @@ object ExplainAll {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.drop(1).headOption.getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val named = args.drop(2).toSeq
+    val names = if (named.isEmpty) headline else named
+    val spark = Sessions.local(4)
+    // Named dumps show full scan Location lists (lake fixtures span many
+    // files); PLANS.md keeps the default 100-char truncation.
+    if (named.nonEmpty) spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
 
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans for headline queries\n\n")
     sb.append(s"Declared surface: ${Registry.all.size} queries; " +
-      s"${headline.size} headline plans dumped below (every plan-shape\n" +
+      s"${names.size} headline plans dumped below (every plan-shape\n" +
       "family is represented; PlanAudit sweeps the full surface for\n" +
-      "cartesian/BNL violations and ReuseAudit for duplicate scans).\n\n")
+      "cartesian/BNL violations and duplicate scans).\n\n")
     sb.append(s"Generated by `graft.tools.ExplainAll` on $sf. What to look\n")
     sb.append("for: `PushedFilters`/`ReadSchema` on scans (pushdown/pruning),\n")
     sb.append("`BroadcastHashJoin` on dims vs `SortMergeJoin` on fact-fact\n")
     sb.append("edges, `TakeOrderedAndProject` for top-k, paired partial/final\n")
     sb.append("`HashAggregate` around each exchange.\n")
-    headline.foreach { name =>
+    names.foreach { name =>
       val df = Registry.byName(name).run(spark, sf)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       sb.append(s"\n## $name\n\n```\n$plan```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
-    println(s"wrote $out (${headline.size} plans)")
+    println(s"wrote $out (${names.size} plans)")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.llm.{Ann, NearDup}
 import graft.multimodal.Multimodal
@@ -13,14 +12,8 @@ import graft.multimodal.Multimodal
 object LlmDemo {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Sessions.local(4)
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
 
     val docs = graft.engine.Tables.documents(spark, sf)
       .select($"doc_id", $"text").limit(40)

@@ -4,7 +4,6 @@ import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.tuning.ParamGridBuilder
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ml._
 
@@ -15,14 +14,8 @@ import graft.ml._
 object MlDemo {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Sessions.local(4)
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
 
     println("== GridSearchCV over embeddings(label) ==")
     val emb = graft.engine.Tables.embeddings(spark, sf)

@@ -5,7 +5,6 @@ import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature.{HashingTF, IDF, Tokenizer}
 import org.apache.spark.ml.tuning.ParamGridBuilder
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ml._
 
@@ -17,14 +16,9 @@ import graft.ml._
 object MlFloorProbe {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // local[32]: the recorded floor measurement ran at 32 cores
+    val spark = graft.engine.Sessions.local(32)
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
 
     val docs = graft.engine.Tables.documents(spark, sf)
       .join(graft.engine.Tables.embeddings(spark, sf), $"doc_id" === $"vec_id")

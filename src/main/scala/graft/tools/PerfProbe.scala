@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.engine.Registry
+import graft.engine.{Registry, Sessions}
 
 /** Timing probe for plan experiments: runs the named registry queries
   * N times against SPARK_GRAFT_SF_DIR and prints per-query best-of times.
@@ -10,14 +9,7 @@ import graft.engine.Registry
 object PerfProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local()
     val names = if (args.nonEmpty) args.toSeq else Registry.all.map(_.name)
     val reg = Registry.byName
     names.foreach { n =>

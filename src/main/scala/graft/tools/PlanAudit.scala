@@ -1,12 +1,29 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.engine.Registry
+import graft.engine.{Registry, Sessions}
 
-/** Whole-surface physical-plan audit: prints any declared query whose
-  * plan contains a CartesianProduct, or a BroadcastNestedLoopJoin outside
-  * the known-tiny set — the cheap global guard PlanSpec's per-query
-  * pins cannot give. Run:
+/** Whole-surface physical-plan audit. Executes every declared query once
+  * and reports two things from its executed plan:
+  *
+  *  - the gate ([[violation]]): a CartesianProduct, or a
+  *    BroadcastNestedLoopJoin outside the known-tiny set — the cheap
+  *    global guard PlanSpec's per-query pins cannot give. It reads the
+  *    whole plan string, whose `== Initial Plan ==` section is the
+  *    pre-execution plan. `AUDIT` lines; exit status 1 on any finding.
+  *  - shared-subtree review (`MULTISCAN` lines): how often each base table
+  *    is scanned in the FINAL adaptive plan (`== Initial Plan ==` stripped
+  *    — it double-counts every subtree AQE later deduplicates). A table
+  *    scanned more than once is either a genuinely different
+  *    projection/filter (fine — the scans prune differently) or a shared
+  *    subtree that failed canonical equality, usually because one consumer
+  *    carries an inferred isnotnull the other lacks; an explicit
+  *    `.isNotNull` on the shared branch re-enables ReuseExchange (see
+  *    TpchShapes Q15/Q20 scaladocs for measured cases). This is a REVIEW
+  *    aid, not a gate — multi-scan is often legitimate (self-joins on
+  *    different slices, union fixtures), so findings need case-by-case
+  *    adjudication before "fixing".
+  *
+  * Run:
   *   sbt "runMain graft.tools.PlanAudit /root/testdata/sf0.001"
   */
 object PlanAudit {
@@ -200,32 +217,59 @@ object PlanAudit {
     // list is top-4 by construction, constant-size at any corpus)
     "q_bpe_merge")
 
+  /** The gate: `Some(finding)` when query `name`'s physical plan string
+    * holds a CartesianProduct or a BroadcastNestedLoopJoin it is not
+    * allowed. */
+  def violation(name: String, plan: String): Option[String] = {
+    val cart = plan.contains("CartesianProduct")
+    val bnl = plan.contains("BroadcastNestedLoopJoin") && !allowedBnl.contains(name)
+    if (cart || bnl) Some(s"cartesian=$cart unexpected_bnl=$bnl") else None
+  }
+
+  /** `table -> n` for each base table scanned more than once in `plan`,
+    * keyed by the last segment of the scan's Location root path (works for
+    * single-file tables AND lake-fixture directories like orders_by_month /
+    * media — a '.parquet' filename regex misses the latter entirely). */
+  private def multiScans(plan: String): Seq[(String, Int)] =
+    "Location: \\w+\\(\\d+ paths?\\)\\[([^\\]]*)\\]".r.findAllMatchIn(plan)
+      .map(_.group(1).split(",")(0).trim
+        .stripSuffix("/").split("/").last.stripSuffix(".parquet"))
+      .toSeq.groupBy(identity).view.mapValues(_.size)
+      .filter(_._2 > 1).toMap.toSeq.sortBy(-_._2)
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(4)
+    // Location strings truncate at the default 100-char metadata limit,
+    // which would hide the path the multi-scan count keys on.
+    spark.conf.set("spark.sql.maxMetadataStringLength", "4096")
     var bad = 0
+    var multi = 0
     Registry.all.foreach { q =>
       try {
-        val plan = q.run(spark, sfDir).queryExecution.executedPlan.toString
-        val cart = plan.contains("CartesianProduct")
-        val bnl = plan.contains("BroadcastNestedLoopJoin") &&
-          !allowedBnl.contains(q.name)
-        if (cart || bnl) {
+        val df = q.run(spark, sfDir)
+        df.collect()
+        val plan = df.queryExecution.executedPlan.toString
+        violation(q.name, plan).foreach { f =>
           bad += 1
-          println(s"AUDIT ${q.name}: cartesian=$cart unexpected_bnl=$bnl")
+          println(s"AUDIT ${q.name}: $f")
+        }
+        // the final plan only: AQE appends the pre-execution tree
+        val fin = plan.split("== Initial Plan ==")(0)
+        val scans = multiScans(fin)
+        if (scans.nonEmpty) {
+          multi += 1
+          val reused = "ReusedExchange".r.findAllIn(fin).size
+          println(s"MULTISCAN ${q.name}: " +
+            scans.map { case (t, n) => s"$t=$n" }.mkString(",") + s" reused=$reused")
         }
       } catch {
         case e: Throwable =>
           bad += 1
-          println(s"AUDIT ${q.name}: plan failed ${e.getClass.getSimpleName}")
+          println(s"AUDIT ${q.name}: failed ${e.getClass.getSimpleName}")
       }
     }
-    println(s"AUDIT_DONE bad=$bad of ${Registry.all.size}")
+    println(s"AUDIT_DONE bad=$bad of ${Registry.all.size} multiscan=$multi")
     spark.stop()
     if (bad > 0) sys.exit(1)
   }

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.streaming.Streams
@@ -15,15 +14,9 @@ import graft.streaming.Streams
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Sessions.local(4)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
 
     // stage the events file into a streaming source dir
     val srcDir = Files.createTempDirectory("stream_events")

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-11 verdict item 8: the three inventory records that drifted apart
@@ -73,5 +74,23 @@ class ContractSpec extends AnyFunSuite {
     assert(bad.isEmpty,
       s"plant offsets inside the organic id range (must be >= 100000):\n" +
         bad.mkString("\n"))
+  }
+
+  // One session factory: every entry point, tool and test takes its
+  // session from engine.Sessions.local, so their settings cannot drift.
+  test("contract guard: engine/Sessions.scala is the only session builder") {
+    val needle = "SparkSession" + ".builder" // split so this file does not match
+    val files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    val sites = files.filter { f =>
+      val src = scala.io.Source.fromFile(f.toFile)
+      try src.mkString.contains(needle) finally src.close()
+    }.map(_.toString).sorted
+    assert(sites == List("src/main/scala/graft/engine/Sessions.scala"),
+      s"build sessions with graft.engine.Sessions.local, not in:\n" +
+        sites.mkString("\n"))
   }
 }

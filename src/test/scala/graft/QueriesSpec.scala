@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.Registry
+import graft.tools.PlanAudit
 
 /** Every declared query must run on sf0.001 and produce a stable schema.
   * Correctness against DuckDB is checked by tools/oracle_check.py + the
@@ -21,6 +22,10 @@ class QueriesSpec extends AnyFunSuite {
       assert(n >= 0)
       if (!mayBeEmpty(q.name)) assert(n > 0, s"${q.name} returned no rows")
       assert(df.columns.nonEmpty)
+      // the whole-surface Cartesian/BNL gate, on the frame's planned (not
+      // re-executed) physical plan
+      val finding = PlanAudit.violation(q.name, df.queryExecution.executedPlan.toString)
+      assert(finding.isEmpty, s"${q.name}: ${finding.getOrElse("")}")
     }
   }
 
@@ -55,14 +60,5 @@ class QueriesSpec extends AnyFunSuite {
 }
 
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.engine.Sessions.local(4)
 }
