@@ -7,8 +7,9 @@ import org.apache.spark.sql.SparkSession
   * the settings every entry point needs: UTC timezone (oracle parity),
   * shuffle partitions sized to cores (not the 200 default — wrong for
   * local mode, and on a real cluster you'd size to ~2-3× total executor
-  * cores). A caller that passes no core count gets `SPARK_GRAFT_CPUS`, else
-  * every available processor.
+  * cores). The same setting sizes every operator spread
+  * ([[Parallel.spread]]). A caller that passes no core count gets
+  * `SPARK_GRAFT_CPUS`, else every available processor.
   */
 object Sessions {
   def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)

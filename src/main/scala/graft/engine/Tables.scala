@@ -66,7 +66,13 @@ object Tables {
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     // harmless for µs files; required for the legacy ns form to load at all
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = t(spark, sfDir, "events")
+    normalizeEvents(t(spark, sfDir, "events"))
+  }
+
+  /** The [[events]] normalization over a frame read with the file's own
+    * schema, batch or streaming (the streaming demo reads the same file
+    * through `readStream`). */
+  def normalizeEvents(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw
@@ -88,5 +94,4 @@ object Tables {
           .withColumn("ts",
             date_trunc("second", col("ts").cast("timestamp_ntz")))
     }
-  }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{GQuery, Tables}
+import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
 
 /** Cross-table audit and entity-analytics queries (SURVEY.md §2.B
@@ -612,16 +612,14 @@ object Analytics {
         val deg = eRaw.groupBy($"src").agg(count(lit(1)).as("deg"))
         // degree rides the edge list: one join before the loop instead
         // of one per iteration.
-        // r15 (guide §2.4): repartition ON src BEFORE the checkpoint —
-        // the LogicalRDD keeps HashPartitioning(src) (the qPcaPower
-        // co-partitioning idiom), and each iteration's rank table exits
-        // its groupBy(dst) partitioned by the SAME key, so the
-        // per-iteration join needs NO exchange on either side (the old
-        // plan re-shuffled + re-sorted the full edge list every round:
-        // 5 Exchange-over-ExistingRDD in the before plan). The
-        // shuffle_hash hint on the small rank side kills the SMJ sorts.
-        val e = eRaw.join(deg, "src")
-          .repartition(spark.sparkContext.defaultParallelism, $"src")
+        // r15 (guide §2.4): spread ON src BEFORE the checkpoint, meant
+        // to keep HashPartitioning(src) on the LogicalRDD so each
+        // iteration's join to the rank table (which exits its
+        // groupBy(dst) partitioned by the SAME key) needs no exchange.
+        // With AQE on the checkpoint drops that partitioning, so the
+        // edge list is still re-shuffled every round (Parallel's doc).
+        // The shuffle_hash hint on the small rank side kills the SMJ sorts.
+        val e = Parallel.spread(eRaw.join(deg, "src"), $"src")
           .localCheckpoint()
         // 1-row table consumed by init + every iteration + the final
         // projection: checkpoint, or each consumer re-aggregates deg.
@@ -741,8 +739,7 @@ object Analytics {
         // same key, shuffle_hash hints kill the per-round sorts; nodes
         // (3 consumers per round + init + final) and the 1-row nS are
         // checkpointed so no round re-aggregates deg or re-joins seeds.
-        val e = eRaw.join(deg, "src")
-          .repartition(spark.sparkContext.defaultParallelism, $"src")
+        val e = Parallel.spread(eRaw.join(deg, "src"), $"src")
           .localCheckpoint()
         val seeds = Tables.part(spark, dir).filter($"p_size" <= 2)
           .select($"p_partkey".as("seed"))

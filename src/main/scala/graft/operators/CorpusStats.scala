@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import graft.engine.{GQuery, Tables}
+import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
 
 /** Corpus-statistics operators (SURVEY.md §2.B.8 extension, round 4
@@ -639,8 +639,7 @@ object CorpusStats {
       // broadcast joins for the verify, where size(array_intersect) is
       // the exact shared-gram count — the whole 2-scan + groupBy verify
       // collapses into a map-side expression over |cand| rows.
-      val dg = docs
-        .repartition(spark.sparkContext.defaultParallelism)
+      val dg = Parallel.spread(docs)
         .select($"doc_id",
           expr("word_grams(split(text, ' '), 3)").as("grams"))
         .localCheckpoint()
@@ -782,8 +781,7 @@ object CorpusStats {
     // candidate list and counts size(array_intersect) map-side — the two
     // exploded verify scans and their groupBy disappear.
     graft.functions.WordGrams.register(spark)
-    val dg = docs
-      .repartition(spark.sparkContext.defaultParallelism)
+    val dg = Parallel.spread(docs)
       .select($"doc_id",
         expr("word_grams(split(text, ' '), 3)").as("grams"))
       .localCheckpoint() // 3 consumers: prefix path + both verify sides

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.engine.{GQuery, Tables}
+import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
 
 /** Graph analytics beyond components/triangles/pagerank: bipartite
@@ -371,7 +371,7 @@ object GraphOps {
           .unionByName(und.select($"pb".as("src"), $"pa".as("dst")))
           .unionByName(verts.select($"v".as("src"), $"v".as("dst")))
         val e = (if (expand > 1)
-            e0.repartition(spark.sparkContext.defaultParallelism, $"src")
+            Parallel.spread(e0, $"src")
           else e0).localCheckpoint()
         // per-round checkpoints measured FASTER here (2.75s vs 3.66s
         // un-checkpointed at sf0.1) despite the labels being

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.engine.{GQuery, Tables}
+import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
 
 /** Inferential statistics over the corpus and event stream: Welch's
@@ -399,15 +399,13 @@ object InferOps {
             val (na, ca) = vars(i); val (nb, cb) = vars(j)
             sum(dec(col(ca) * col(cb))).cast("double").as(s"p_${na}_$nb")
           })
-        // r15: project to the 4 measures and repartition before the
-        // 15-decimal-sum pass — the fixture parquet is ONE row group
-        // (r13 gotcha), so the unpartitioned global agg ran its entire
-        // decimal accumulation single-core; the exchange moves 4 narrow
-        // columns once and decimal sums are order-free, so the moment
-        // row (and everything derived from it) is bit-identical.
-        val m = Tables.lineitem(spark, dir)
-          .select(vars.map { case (_, c) => col(c) }: _*)
-          .repartition(spark.sparkContext.defaultParallelism)
+        // r15: project to the 4 measures and spread before the
+        // 15-decimal-sum pass, which otherwise ran single-core; the
+        // exchange moves 4 narrow columns once and decimal sums are
+        // order-free, so the moment row (and everything derived from it)
+        // is bit-identical.
+        val m = Parallel.spread(Tables.lineitem(spark, dir)
+            .select(vars.map { case (_, c) => col(c) }: _*))
           .agg(sums.head, sums.tail: _*)
         val pairCols = for {
           i <- vars.indices; j <- (i + 1) until vars.length

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{GQuery, Tables}
+import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
 
 /** LLM-training-data pipeline operators (SURVEY.md §2.B.8): deduplication,
@@ -1512,19 +1512,15 @@ object LlmOps {
         // the only shuffle left is the combinable groupBy's 4,096 cells
         // per partition. Term values (xi·xj as double → decimal(30,12))
         // are identical and decimal sums are order-free, so the matrix
-        // is bit-identical. Repartition (round-robin, cheap: |emb| rows)
-        // only restores multi-core parallelism over the single-row-group
-        // fixture scan (r13 gotcha).
-        val xRows = emb
-          .repartition(spark.sparkContext.defaultParallelism)
+        // is bit-identical. The round-robin spread is cheap (|emb| rows).
+        val xRows = Parallel.spread(emb)
           .select($"vec_id", posexplode($"embedding").as(Seq("pos", "xf")))
           .select($"vec_id", ($"pos" + 1).cast("int").as("i"),
             $"xf".cast("double").as("x"))
         val nRow = emb.agg(count(lit(1)).cast("double").as("nn"))
         val s = xRows.groupBy($"i")
           .agg(sum($"x".cast("decimal(30,12)")).cast("double").as("s"))
-        val p = emb
-          .repartition(spark.sparkContext.defaultParallelism)
+        val p = Parallel.spread(emb)
           .select(posexplode($"embedding").as(Seq("pa", "xa")), $"embedding")
           .select(($"pa" + 1).cast("int").as("i"),
             $"xa".cast("double").as("xi"),
@@ -1689,16 +1685,14 @@ object LlmOps {
     // no checkpoint, no self-join); x stays as the plain exploded rows
     // for the first moments and the outlier scoring pass (both
     // combinable aggs over map-only scans).
-    val x = emb
-          .repartition(spark.sparkContext.defaultParallelism)
+    val x = Parallel.spread(emb)
           .select($"vec_id", posexplode($"embedding").as(Seq("pos", "xf")))
           .select($"vec_id", ($"pos" + 1).cast("int").as("i"),
             $"xf".cast("double").as("x"))
         val nRow = emb.agg(count(lit(1)).cast("double").as("nn"))
         val s = x.groupBy($"i")
           .agg(sum($"x".cast("decimal(30,12)")).cast("double").as("s"))
-        val p = emb
-          .repartition(spark.sparkContext.defaultParallelism)
+        val p = Parallel.spread(emb)
           .select(posexplode($"embedding").as(Seq("pa", "xa")), $"embedding")
           .select(($"pa" + 1).cast("int").as("i"),
             $"xa".cast("double").as("xi"),
@@ -1987,8 +1981,7 @@ object LlmOps {
         Tables.embeddings(spark, dir).select($"vec_id", $"embedding"),
         expand)
       .unionByName(planted)
-    val x = emb
-      .repartition(spark.sparkContext.defaultParallelism, $"vec_id")
+    val x = Parallel.spread(emb, $"vec_id")
       .select($"vec_id", posexplode($"embedding").as(Seq("pos", "xf")))
       .select($"vec_id", ($"pos" + 1).cast("int").as("i"),
         $"xf".cast("double").as("x"))

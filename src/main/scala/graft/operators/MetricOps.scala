@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.engine.{GQuery, Tables}
+import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
 
 /** Economic / survival / distribution-comparison metrics: Gini
@@ -690,15 +690,13 @@ object MetricOps {
     (spark, dir) => {
       import spark.implicits._
       val dec = (c: org.apache.spark.sql.Column) => c.cast("decimal(30,6)")
-      // r15: project + repartition before the broadcast probe and the
-      // high-cardinality (m, part) partial agg — the single-row-group
-      // fixture scan ran all of it one-core (r13 gotcha / the
-      // q_corr_matrix fix); decimal sums are order-free so the per-group
-      // moments are bit-identical.
-      val mp = Tables.lineitem(spark, dir)
-        .select($"l_orderkey", $"l_partkey", $"l_extendedprice",
-          $"l_quantity")
-        .repartition(spark.sparkContext.defaultParallelism)
+      // r15: project + spread before the broadcast probe and the
+      // high-cardinality (m, part) partial agg, which otherwise ran
+      // one-core (the q_corr_matrix fix); decimal sums are order-free so
+      // the per-group moments are bit-identical.
+      val mp = Parallel.spread(Tables.lineitem(spark, dir)
+          .select($"l_orderkey", $"l_partkey", $"l_extendedprice",
+            $"l_quantity"))
         .join(broadcast(Tables.orders(spark, dir)
           .select($"o_orderkey",
             (year($"o_orderdate") * 12 + month($"o_orderdate")).as("m"))),

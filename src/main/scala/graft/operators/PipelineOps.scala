@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
-import graft.engine.{GQuery, Tables}
+import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
 
 /** Training-data pipeline operators beyond dedup/quality (SURVEY.md
@@ -3445,10 +3445,7 @@ object PipelineOps {
   private[graft] def cdcChunkDigests(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     graft.functions.CdcChunks.register(docs.sparkSession)
-    docs
-      // single-row-group fixture parquet: repartition restores the
-      // scan-split parallelism of a real corpus (see ScaleOps.kernelSigs)
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    Parallel.spread(docs)
       .select($"doc_id",
         explode(expr("cdc_chunks(split(text, ' '))")).as("c"))
       .select($"doc_id", $"c.ch".as("ch"), $"c.tok".as("tok"))

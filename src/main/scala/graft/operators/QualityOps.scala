@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{GQuery, Tables}
+import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
 
 /** Corpus-quality and heavy-tail audits (SURVEY.md §2.B.8 extension,
@@ -29,13 +29,12 @@ object QualityOps {
     (spark, dir) => {
       import spark.implicits._
       // r15: fused word_grams kernel (byte-identical set, WordGramsSpec)
-      // instead of the interpreted transform chain, repartition for the
-      // single-row-group fixture (r13 gotcha), and the keep-first WINDOW
-      // min (r12 idiom) instead of groupBy+self-join — the gram explode
-      // now runs once instead of twice and one exchange replaces two.
+      // instead of the interpreted transform chain, a spread before it,
+      // and the keep-first WINDOW min (r12 idiom) instead of
+      // groupBy+self-join — the gram explode now runs once instead of
+      // twice and one exchange replaces two.
       graft.functions.WordGrams.register(spark)
-      val g = Tables.documents(spark, dir)
-        .repartition(spark.sparkContext.defaultParallelism)
+      val g = Parallel.spread(Tables.documents(spark, dir))
         .select($"doc_id",
           explode(expr("word_grams(split(text, ' '), 3)")).as("gram"))
       g.withColumn("first_doc", min($"doc_id").over(

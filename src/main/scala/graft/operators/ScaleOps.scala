@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{GQuery, Tables}
+import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
 
 /** Scale-path operators under the FULL hash-match oracle (SURVEY.md §2.B.8
@@ -70,14 +70,12 @@ object ScaleOps {
     * (cheap), the sf0.1 bench sees ~50,000. */
   private[operators] def xdocs(base: DataFrame, n: Int): DataFrame =
     if (n <= 1) base
-    else base
-      // r15: repartition the BASE before the ×N explode — the fixture
-      // parquet is one row group (r13 gotcha), so without this the
-      // per-replica token-suffix rebuild of the whole ×N corpus ran on
-      // a single core upstream of every consumer's first exchange
-      // (measured: q_neardup_minhash_xxl 5.2 → 2.7 s, q_band_sweep_xxl
-      // 5.4 → 2.5 s, q_containment_xxl 3.2 → 2.2 s).
-      .repartition(base.sparkSession.sparkContext.defaultParallelism)
+    // r15: spread the BASE before the ×N explode, or the per-replica
+    // token-suffix rebuild of the whole ×N corpus runs on a single core
+    // upstream of every consumer's first exchange (measured:
+    // q_neardup_minhash_xxl 5.2 → 2.7 s, q_band_sweep_xxl 5.4 → 2.5 s,
+    // q_containment_xxl 3.2 → 2.2 s).
+    else Parallel.spread(base)
       .select(col("doc_id"), col("text"),
         explode(expr(s"sequence(0, ${n - 1})")).as("k"))
       .select((col("doc_id") + col("k").cast("long") * lit(100000L))
@@ -112,13 +110,7 @@ object ScaleOps {
       extraCols: String*): DataFrame = {
     graft.functions.MinHashSig.register(docs.sparkSession)
     val keep = "doc_id" +: extraCols
-    docs
-      // the testdata parquet is ONE row group (unsplittable), so a
-      // map-only kernel would run on a single core locally; repartition
-      // restores the scan-split parallelism a real multi-split corpus
-      // gets for free (and still ships fewer bytes than the gram-explode
-      // shuffle this kernel replaced)
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+    Parallel.spread(docs)
       .select(keep.map(col) :+ expr("minhash_sig(split(text, ' '))").as("mh"): _*)
       .filter(size(col("mh")) === 16)
       .select(keep.map(col) ++ (0 until 16).map(i =>
@@ -133,11 +125,9 @@ object ScaleOps {
     * becomes a no-op). */
   private[operators] def xvecs(base: DataFrame, n: Int): DataFrame =
     if (n <= 1) base
+    // no spread, unlike xdocs: an r15 A/B measured it neutral here (the
+    // 5k-row embedding base is cheap to rebuild)
     else base
-      // r15: same base repartition as xdocs (A/B measured neutral here —
-      // the 5k-row embedding base is cheap to rebuild — kept for the
-      // same one-core-scan reasoning and layout consistency).
-      .repartition(base.sparkSession.sparkContext.defaultParallelism)
       .select(col("vec_id"), col("embedding"),
         explode(expr(s"sequence(0, ${n - 1})")).as("k"))
       .select((col("vec_id") + col("k").cast("long") * lit(100000L))
@@ -724,9 +714,7 @@ object ScaleOps {
         // is byte-identical to the relational explode(array_distinct) →
         // 64-agg form the oracle mirrors (Round14Spec, row-for-row);
         // map-only, one md5 per distinct token, no doc-keyed shuffle.
-        // Repartition first: single-row-group fixture parquet (r13).
-        val fp = graft.llm.NearDup.simHash64PerRow(
-          docs.repartition(spark.sparkContext.defaultParallelism))
+        val fp = graft.llm.NearDup.simHash64PerRow(Parallel.spread(docs))
         // the (|docs| × 3 longs) fingerprint table feeds three consumers
         // (band explode + both hamming sides) — truncate the kernel
         // lineage once instead of re-running it per branch

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.engine.{GQuery, Tables}
+import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
 
 /** Corpus search & drift: positional inverted-index phrase lookup and
@@ -48,8 +48,7 @@ object SearchOps {
       // measured slower, r8 gotcha) and counts are unchanged: idx has
       // one row per (doc, pos), so each cut leg contributes the same
       // ≤1 row per position the old join-condition filter kept.
-      val docsSplit = Tables.documents(spark, dir)
-        .repartition(spark.sparkContext.defaultParallelism)
+      val docsSplit = Parallel.spread(Tables.documents(spark, dir))
         .select($"doc_id", split($"text", " ").as("l"))
       val idx = docsSplit
         .select($"doc_id", posexplode($"l").as(Seq("pos", "tok")))

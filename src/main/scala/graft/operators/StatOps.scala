@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{GQuery, Tables}
+import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
 
 /** Distribution, text-distribution, and graph statistics (SURVEY.md §2.B
@@ -359,7 +359,7 @@ object StatOps {
           .unionByName(und.select($"pb".as("src"), $"pa".as("dst")))
           .unionByName(vs.select($"v".as("src"), $"v".as("dst")))
         val e = (if (expand > 1)
-            e0.repartition(spark.sparkContext.defaultParallelism, $"src")
+            Parallel.spread(e0, $"src")
           else e0).localCheckpoint()
         var l = vs.select($"v".as("node"), $"v".as("lbl"))
         for (_ <- 1 to iters) {
@@ -1012,11 +1012,9 @@ object StatOps {
         .select($"l_orderkey", $"l_linenumber",
           $"l_quantity".as("x"),
           ($"l_extendedprice" / lit(1000.0)).as("y"))
-      // r15: repartition the moment pass — the 6-decimal-sum global agg
-      // otherwise runs one-core over the single-row-group fixture scan
-      // (the q_corr_matrix fix); decimal sums are order-free.
-      val st = li
-        .repartition(spark.sparkContext.defaultParallelism)
+      // r15: spread the moment pass (the q_corr_matrix fix); decimal
+      // sums are order-free.
+      val st = Parallel.spread(li)
         .agg(count(lit(1)).as("n"),
         sum(dec($"x")).cast("double").as("sx"),
         sum(dec($"y")).cast("double").as("sy"),

@@ -2,8 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import graft.engine.Tables
 import graft.streaming.Streams
 
 /** Streaming usage example: replay the events table through a file-source
@@ -15,7 +14,6 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = graft.engine.Sessions.local(4)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import spark.implicits._
 
     // stage the events file into a streaming source dir
@@ -23,19 +21,12 @@ object StreamDemo {
     Files.copy(Paths.get(s"$sf/events.parquet"),
       srcDir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
 
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", LongType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-
-    def normalize(df: org.apache.spark.sql.DataFrame) = df
-      .withColumn("ts",
-        date_trunc("second",
-          timestamp_micros((col("ts") / 1000L).cast("long"))
-            .cast("timestamp_ntz")).cast("timestamp"))
-
-    val stream = normalize(
-      spark.readStream.schema(schema).parquet(srcDir.toString))
+    // the batch loader sets the conf the legacy ns-long `ts` form needs,
+    // so the stream below reads the file with its own schema either way
+    val batchEvents = Tables.events(spark, sf)
+    val stream = Tables.normalizeEvents(spark.readStream
+      .schema(spark.read.parquet(srcDir.toString).schema)
+      .parquet(srcDir.toString))
     val q = Streams.tumblingAggWatermarked(stream, "1 day", "1 hour")
       .writeStream.format("memory").queryName("agg")
       .outputMode("append").start()
@@ -45,8 +36,7 @@ object StreamDemo {
     println(s"== streaming tumbling agg (append mode, finalized windows) ==")
     streamed.orderBy("window_start", "event_type").show(8, false)
 
-    val batch = Streams.tumblingAgg(
-      normalize(spark.read.parquet(s"$sf/events.parquet")), "1 day")
+    val batch = Streams.tumblingAgg(batchEvents, "1 day")
     val bc = batch.count(); val sc = streamed.count()
     // append mode withholds windows not yet past the watermark — the open
     // tail day(s) — so streamed is a strict prefix of batch

@@ -93,4 +93,26 @@ class ContractSpec extends AnyFunSuite {
       s"build sessions with graft.engine.Sessions.local, not in:\n" +
         sites.mkString("\n"))
   }
+
+  // One parallelism seam: operators spread frames with
+  // engine.Parallel.spread, whose count follows the session's shuffle
+  // partitions, never with a count of their own.
+  test("contract guard: no operator sizes a spread by defaultParallelism") {
+    val files = {
+      val walk = java.nio.file.Files.walk(
+        java.nio.file.Paths.get("src/main/scala/graft/operators"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    val hits = files.sortBy(_.toString).flatMap { f =>
+      val src = scala.io.Source.fromFile(f.toFile)
+      try src.getLines().zipWithIndex.collect {
+        case (line, i) if line.contains("defaultParallelism") => s"$f:${i + 1}"
+      }.toList
+      finally src.close()
+    }
+    assert(hits.isEmpty,
+      s"spread with graft.engine.Parallel.spread, not at:\n" +
+        hits.mkString("\n"))
+  }
 }

@@ -9,8 +9,10 @@ import graft.engine.Registry
   * executable test — shuffle partitioning changes aggregation merge order,
   * window partition placement, and join build layout, so any float
   * accumulation in merge order (the classic nondeterminism bug) fails
-  * here. Complements the DuckDB oracle, which catches cross-ENGINE drift
-  * but runs each engine at one fixed layout.
+  * here. Every operator spread and keyed co-partition takes its count
+  * from the same setting (`graft.engine.Parallel.spread`), so the sweep
+  * varies those layouts too. Complements the DuckDB oracle, which catches
+  * cross-ENGINE drift but runs each engine at one fixed layout.
   */
 class DeterminismSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
