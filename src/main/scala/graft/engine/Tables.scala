@@ -1,7 +1,11 @@
 package graft.engine
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Typed loaders for the driver-generated testdata tables
   * (see TESTDATA.md / FIXTURES.md). All tables are Parquet; the vectorized
@@ -31,8 +35,33 @@ import org.apache.spark.sql.functions._
   *  - embeddings(vec_id long, embedding array<float>, label int)
   */
 object Tables {
-  private def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** One version of one fixture file: its qualified path, length and
+    * modification time, and the `nanosAsLong` setting it was read under
+    * (it decides the type of a legacy nanosecond `ts`). */
+  private final case class FileVersion(path: String, length: Long, mtime: Long,
+      nanosAsLong: String)
+
+  /** The schema Spark inferred per file version. A schema-less
+    * `spark.read.parquet` infers it with a Spark job on every read
+    * (`SchemaMergeUtils.mergeSchemasInParallel`, even for one file); with
+    * the schema given, a read starts no job. Only the `StructType` is
+    * kept: every read still lists the file, and every query analyzes,
+    * plans and scans it afresh. A rewritten file has a new length or
+    * mtime, so it is inferred again. Files this code writes itself (the
+    * `sources.Lake` fixtures, read in `operators.Partitioned`,
+    * `operators.Formats` and `sources.Sources`, and the upsert snapshots
+    * of `streaming.Streams`) are read with `spark.read` directly and
+    * never pass through this memo. */
+  private val schemas = new ConcurrentHashMap[FileVersion, StructType]()
+
+  private def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = new Path(s"$sfDir/$name.parquet")
+    val st = path.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(path)
+    val version = FileVersion(st.getPath.toString, st.getLen, st.getModificationTime,
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    val schema = schemas.computeIfAbsent(version, _ => spark.read.parquet(path.toString).schema)
+    spark.read.schema(schema).parquet(path.toString)
+  }
 
   def region(spark: SparkSession, sfDir: String): DataFrame   = t(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame   = t(spark, sfDir, "nation")

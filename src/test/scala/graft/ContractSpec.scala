@@ -98,21 +98,38 @@ class ContractSpec extends AnyFunSuite {
   // engine.Parallel.spread, whose count follows the session's shuffle
   // partitions, never with a count of their own.
   test("contract guard: no operator sizes a spread by defaultParallelism") {
-    val files = {
-      val walk = java.nio.file.Files.walk(
-        java.nio.file.Paths.get("src/main/scala/graft/operators"))
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
-    val hits = files.sortBy(_.toString).flatMap { f =>
-      val src = scala.io.Source.fromFile(f.toFile)
-      try src.getLines().zipWithIndex.collect {
-        case (line, i) if line.contains("defaultParallelism") => s"$f:${i + 1}"
-      }.toList
-      finally src.close()
-    }
+    val hits = linesContaining("src/main/scala/graft/operators", Seq("defaultParallelism"))
     assert(hits.isEmpty,
       s"spread with graft.engine.Parallel.spread, not at:\n" +
         hits.mkString("\n"))
+  }
+
+  // engine.Sessions keeps only a short status history (finished SQL
+  // executions, jobs, stages) because nothing reads it: the UI is off and
+  // no code here calls the status store or tracker. A reader must raise
+  // those limits first.
+  test("contract guard: nothing reads Spark's status store") {
+    // split so this file does not match
+    val hits = linesContaining("src", Seq("." + "statusStore", "." + "statusTracker"))
+    assert(hits.isEmpty,
+      s"raise the status retention in engine.Sessions before reading it at:\n" +
+        hits.mkString("\n"))
+  }
+
+  /** `file:line` of every line under `dir`'s Scala sources that contains
+    * one of `needles`. */
+  private def linesContaining(dir: String, needles: Seq[String]): List[String] = {
+    val files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    files.sortBy(_.toString).flatMap { f =>
+      val src = scala.io.Source.fromFile(f.toFile)
+      try src.getLines().zipWithIndex.collect {
+        case (line, i) if needles.exists(line.contains) => s"$f:${i + 1}"
+      }.toList
+      finally src.close()
+    }
   }
 }
