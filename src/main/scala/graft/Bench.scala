@@ -1,12 +1,13 @@
 package graft
 object Bench {
+  import Verify.jstr
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.engine.Sessions.local()
     // Warmup pass: the first jobs in a fresh JVM pay several seconds of
     // classloading + codegen compilation that say nothing about plan
     // quality. Run every query once un-timed, then time the real pass.
-    val benched = graft.engine.Registry.all.filter(_.bench)
+    val benched = graft.engine.Registry.all
     // A finished query's localCheckpoint blocks stay in the BlockManager
     // until the ContextCleaner notices the RDD is unreachable — which, in
     // a 466-query single-JVM pass, it does far slower than the checkpoint-
@@ -116,11 +117,6 @@ object Bench {
     val suspects = retimed.collect {
       case (n, t2) if t2 > 0 && firstByName(n) / t2 > 1.5 => n
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     val qs = timed.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
     val es = errs.map { case (k, m) => jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")
     val rt = retimed.map { case (k, v) => jstr(k) + ":" + f"$v%.3f" }

@@ -20,6 +20,20 @@ object Verify {
     spark.stop()
   }
 
+  /** JSON string literal of `s`: escapes backslash, quote and ALL control
+    * chars (<0x20) — a tab or CR in builder-authored SQL would otherwise
+    * make the driver's json.load fail and silently zero the round's
+    * correctness. Bench writes its JSON lines with it too. */
+  def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** Writes `<outDir>/<name>` parquet for each query in `names` (every
     * declared query when empty), the matching `oracle_sql.json`, and
     * `errors.json`. */
@@ -50,25 +64,13 @@ object Verify {
         } catch { case _: Throwable => () }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => names.isEmpty || names.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Self-describing failure record alongside the dumps (count + per-query
     // message), so breakage is visible even to a reader who only lists outDir.
-    val errJson = failed.map { case (k, v) => s"${q(k)}: ${q(v)}" }
+    val errJson = failed.map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }
       .mkString(s"""{"n_errors": ${failed.size}, "errors": {""", ",", "}}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     if (failed.nonEmpty)

@@ -12,9 +12,7 @@ import org.apache.spark.sql.types.DecimalType
 final case class GQuery(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    /** include in Bench headline timing (all oracle queries are) */
-    bench: Boolean = true)
+    oracle: Option[String])
 
 object GQuery {
   /** Determinism helpers (SURVEY.md §5.2 hash-match hardening).

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -59,13 +58,6 @@ case class CdcChunks(child: Expression) extends UnaryExpression {
 }
 
 object CdcChunks {
-
-  /** Register `cdc_chunks(tokens)` for `expr`/SQL use. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_chunks",
-      exprs => CdcChunks(exprs(0)),
-      "built-in")
 
   private val HEX = "0123456789abcdef".toCharArray
   private val MIN_TOKENS = 5L

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -27,8 +26,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *
   * Zero-norm inputs yield NaN (0/0) — identical to the composed form.
   *
-  * Usage: `CosineSim.register(spark)` once per session, then
-  * `expr("cosine_sim(a, b)")` / SQL.
+  * Usage: `graft.functions.cosineSim(a, b)`; SQL users call
+  * `cosine_sim(a, b)` after `graft.functions.registerAllFunctions`.
   */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -89,14 +88,4 @@ case class CosineSim(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSim {
-  /** Register `cosine_sim(a, b)` for use via `expr(...)`/SQL on this
-    * session. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      exprs => CosineSim(exprs(0), exprs(1)),
-      "built-in")
 }

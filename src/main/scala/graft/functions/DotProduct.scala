@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -20,8 +19,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * higher-order form and DuckDB's `list_inner_product`, so results remain
   * bit-identical across all three implementations.
   *
-  * Usage: `DotProduct.register(spark)` once per session, then
-  * `expr("dot_product(a, b)")` / SQL.
+  * Usage: `graft.functions.dotProduct(a, b)`; SQL users call
+  * `dot_product(a, b)` after `graft.functions.registerAllFunctions`.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -67,14 +66,4 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
-}
-
-object DotProduct {
-  /** Register `dot_product(a, b)` for use via `expr(...)`/SQL on this
-    * session. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      exprs => DotProduct(exprs(0), exprs(1)),
-      "built-in")
 }

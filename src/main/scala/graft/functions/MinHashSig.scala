@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -63,13 +62,6 @@ case class MinHashSig(child: Expression) extends UnaryExpression {
 }
 
 object MinHashSig {
-
-  /** Register `minhash_sig(tokens)` for `expr`/SQL use. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => MinHashSig(exprs(0)),
-      "built-in")
 
   private val HEX = "0123456789abcdef".toCharArray
   private val EMPTY = new GenericArrayData(Array.empty[Any])

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -82,17 +81,6 @@ case class NgramDigests(child: Expression, n: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object NgramDigests {
-  /** Register `ngram_digests(tokens, n)` (n a literal) for `expr`/SQL use
-    * on this session. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_digests",
-      exprs => NgramDigests(exprs(0),
-        literalIntArg(exprs(1), "ngram_digests", "n")),
-      "built-in")
-}
-
 /** One-pass DISTINCT word n-grams over a token array, as the gram
   * STRINGS themselves (first-occurrence order): the kernel twin of the
   * composable `array_distinct(transform(sequence(...), i -> concat_ws(' ',
@@ -123,16 +111,6 @@ case class WordGrams(child: Expression, n: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): WordGrams =
     copy(child = newChild)
-}
-
-object WordGrams {
-  /** Register `word_grams(tokens, n)` (n a literal). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_grams",
-      exprs => WordGrams(exprs(0),
-        literalIntArg(exprs(1), "word_grams", "n")),
-      "built-in")
 }
 
 object NgramStats {
@@ -219,13 +197,4 @@ object NgramStats {
     }
     new GenericArrayData(Array(total, distinct))
   }
-
-  /** Register `ngram_stats(tokens, n)` (n a literal) for `expr`/SQL use on
-    * this session. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_stats",
-      exprs => NgramStats(exprs(0),
-        literalIntArg(exprs(1), "ngram_stats", "n")),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -62,13 +61,6 @@ case class RepetitionStats(child: Expression) extends UnaryExpression {
 }
 
 object RepetitionStats {
-
-  /** Register `repetition_stats(text)` for `expr`/SQL use. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "repetition_stats",
-      exprs => RepetitionStats(exprs(0)),
-      "built-in")
 
   private def cp(s: String): Long = s.codePointCount(0, s.length).toLong
 

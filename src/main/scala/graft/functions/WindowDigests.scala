@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -50,15 +49,6 @@ case class WindowDigests(child: Expression, w: Int) extends UnaryExpression {
 }
 
 object WindowDigests {
-
-  /** Register `window_digests(tokens, w)` (w a literal) for `expr`/SQL
-    * use. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "window_digests",
-      exprs => WindowDigests(exprs(0),
-        literalIntArg(exprs(1), "window_digests", "width")),
-      "built-in")
 
   private val HEX = "0123456789abcdef".toCharArray
   private val SPACE = Array[Byte](' ')

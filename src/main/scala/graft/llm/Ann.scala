@@ -6,6 +6,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.dotProduct
 
 /** Similarity search over an embedding column (SURVEY.md §2.B.8).
   *
@@ -24,10 +25,6 @@ object Ann {
 
   private def asDouble(c: String) = expr(s"transform($c, x -> cast(x as double))")
 
-  /** Codegen'd native dot product (graft.functions.DotProduct); callers
-    * register it on the corpus session before building the plan. */
-  private def dot(a: String, b: String) = expr(s"dot_product($a, $b)")
-
   /** Exact cosine top-k of each probe vector against the corpus.
     * Probes are broadcast; the corpus streams. */
   def bruteForceTopK(
@@ -36,15 +33,14 @@ object Ann {
       k: Int,
       idCol: String = "vec_id",
       embCol: String = "embedding"): DataFrame = {
-    graft.functions.DotProduct.register(corpus.sparkSession)
     // precompute per-vector norms: one fold per vector, not per pair
     val c = corpus.select(col(idCol).as("c_id"), asDouble(embCol).as("c_emb"))
-      .withColumn("c_norm", sqrt(dot("c_emb", "c_emb")))
+      .withColumn("c_norm", sqrt(dotProduct(col("c_emb"), col("c_emb"))))
     val p = probes.select(col(idCol).as("p_id"), asDouble(embCol).as("p_emb"))
-      .withColumn("p_norm", sqrt(dot("p_emb", "p_emb")))
+      .withColumn("p_norm", sqrt(dotProduct(col("p_emb"), col("p_emb"))))
     val scored = c.crossJoin(broadcast(p))
       .select(col("p_id"), col("c_id"),
-        (dot("p_emb", "c_emb") / (col("p_norm") * col("c_norm")))
+        (dotProduct(col("p_emb"), col("c_emb")) / (col("p_norm") * col("c_norm")))
           .as("cos_sim"))
     val w = Window.partitionBy(col("p_id"))
       .orderBy(col("cos_sim").desc, col("c_id"))
@@ -105,9 +101,8 @@ object Ann {
       embCol: String = "embedding",
       seed: Long = 42L): DataFrame = {
     val spark = corpus.sparkSession
-    graft.functions.DotProduct.register(spark)
     val c = corpus.select(col(idCol).as("c_id"), asDouble(embCol).as("c_emb"))
-      .withColumn("c_norm", sqrt(dot("c_emb", "c_emb")))
+      .withColumn("c_norm", sqrt(dotProduct(col("c_emb"), col("c_emb"))))
       .withColumn("v", array_to_vector(col("c_emb")))
     // The quantizer is fit on a deterministic hash-SAMPLE, never the full
     // corpus: KMeans only needs enough vectors to place nCells centroids
@@ -134,12 +129,13 @@ object Ann {
 
     // each probe → its nProbe nearest cells (by cosine to the centroid)
     val p = probes.select(col(idCol).as("p_id"), asDouble(embCol).as("p_emb"))
-      .withColumn("p_norm", sqrt(dot("p_emb", "p_emb")))
+      .withColumn("p_norm", sqrt(dotProduct(col("p_emb"), col("p_emb"))))
     val cellRank = Window.partitionBy(col("p_id"))
       .orderBy(col("cell_cos").desc, col("cell"))
     val probeCells = p.crossJoin(broadcast(cents))
       .withColumn("cell_cos",
-        dot("p_emb", "cent") / (col("p_norm") * sqrt(dot("cent", "cent"))))
+        dotProduct(col("p_emb"), col("cent")) /
+          (col("p_norm") * sqrt(dotProduct(col("cent"), col("cent")))))
       .withColumn("cell_rnk", row_number().over(cellRank))
       .filter(col("cell_rnk") <= nProbe)
       .select(col("p_id"), col("p_emb"), col("p_norm"), col("cell"))
@@ -149,7 +145,7 @@ object Ann {
       .orderBy(col("cos_sim").desc, col("c_id"))
     assigned.join(broadcast(probeCells), "cell")
       .select(col("p_id"), col("c_id"),
-        (dot("p_emb", "c_emb") / (col("p_norm") * col("c_norm")))
+        (dotProduct(col("p_emb"), col("c_emb")) / (col("p_norm") * col("c_norm")))
           .as("cos_sim"))
       .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
   }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.{cdcChunks, minhashSig, simhash64}
 
 /** Near-duplicate detection (SURVEY.md §2.B.8 ◻ set) — the scale paths
   * that exact hashing can't cover. None of these are SQL-expressible, so
@@ -119,9 +120,8 @@ object NearDup {
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    graft.functions.SimHash64.register(docs.sparkSession)
     docs.select(col(idCol).as("id"),
-        expr(s"simhash64(split(${q(textCol)}, ' '))").as("f"))
+        simhash64(split(col(textCol), " ")).as("f"))
       .select(col("id"), col("f.lo").as("fp_lo"), col("f.hi").as("fp_hi"))
   }
 
@@ -239,10 +239,9 @@ object NearDup {
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    graft.functions.MinHashSig.register(docs.sparkSession)
     val sigs = docs
       .select(col(idCol).as("id"),
-        expr(s"minhash_sig(split(${q(textCol)}, ' '))").as("mh"))
+        minhashSig(split(col(textCol), " ")).as("mh"))
       .filter(size(col("mh")) === 16)
       .select(col("id") +: (0 until 16).map(i =>
         element_at(col("mh"), i + 1).as(s"h$i")): _*)
@@ -342,9 +341,8 @@ object NearDup {
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    graft.functions.CdcChunks.register(docs.sparkSession)
     docs.select(col(idCol).as("id"),
-        explode(expr(s"cdc_chunks(split(${q(textCol)}, ' '))")).as("c"))
+        explode(cdcChunks(split(col(textCol), " "))).as("c"))
       .select(col("id"), col("c.ch").as("ch"), col("c.tok").as("tok"))
   }
 

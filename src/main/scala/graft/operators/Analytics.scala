@@ -733,12 +733,13 @@ object Analytics {
           .unionByName(pr.select($"p2".as("src"), $"p1".as("dst")))
           .localCheckpoint()
         val deg = eRaw.groupBy($"src").agg(count(lit(1)).as("deg"))
-        // r15: same co-partitioned loop economy as mkPagerank — edge
-        // list hash-partitioned on src once before its checkpoint, the
-        // rank/contribution tables exit each round partitioned by the
-        // same key, shuffle_hash hints kill the per-round sorts; nodes
-        // (3 consumers per round + init + final) and the 1-row nS are
-        // checkpointed so no round re-aggregates deg or re-joins seeds.
+        // r15: same loop shape as mkPagerank — edge list
+        // hash-partitioned on src once before its checkpoint (with AQE
+        // on the checkpoint drops that partitioning, so each round still
+        // re-shuffles it; Parallel's doc), shuffle_hash hints kill the
+        // per-round sorts; nodes (3 consumers per round + init + final)
+        // and the 1-row nS are checkpointed so no round re-aggregates
+        // deg or re-joins seeds.
         val e = Parallel.spread(eRaw.join(deg, "src"), $"src")
           .localCheckpoint()
         val seeds = Tables.part(spark, dir).filter($"p_size" <= 2)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
+import graft.functions.wordGrams
 
 /** Corpus-statistics operators (SURVEY.md §2.B.8 extension, round 4
   * continued): token-distribution entropy, bigram PMI collocations,
@@ -289,10 +290,9 @@ object CorpusStats {
       val docs = base.unionByName(
         base.filter($"doc_id" < 50)
           .select(($"doc_id" + 100000L).as("doc_id"), $"text"))
-      graft.functions.WordGrams.register(spark)
       val g = docs
         .select($"doc_id",
-          explode(expr("word_grams(split(text, ' '), 3)")).as("gram"))
+          explode(wordGrams(split($"text", " "), 3)).as("gram"))
       // fused-kernel signature stage (byte-identical to the relational
       // oracle stage below — 4 md5s per distinct gram in one map-only
       // pass; see ScaleOps.kernelSigs / MinHashSigSpec); the gram table
@@ -628,7 +628,6 @@ object CorpusStats {
               slice(split($"text", " "), lit(1),
                 floor(size(split($"text", " ")) / 2).cast("int")))
               .as("text")))
-      graft.functions.WordGrams.register(spark)
       // r15 optimization-round rewrite (guide §2.3/§2.4): the old form
       // re-evaluated the corpus gram-explode FIVE times (df agg, posting
       // join, both verify sides, sizes agg). Now the per-doc distinct-gram
@@ -641,7 +640,7 @@ object CorpusStats {
       // collapses into a map-side expression over |cand| rows.
       val dg = Parallel.spread(docs)
         .select($"doc_id",
-          expr("word_grams(split(text, ' '), 3)").as("grams"))
+          wordGrams(split($"text", " "), 3).as("grams"))
         .localCheckpoint()
       val g = dg.select($"doc_id", explode($"grams").as("gram"))
       val posting = g
@@ -780,10 +779,9 @@ object CorpusStats {
     // window; (d) the verify joins the gram ARRAYS to the broadcast
     // candidate list and counts size(array_intersect) map-side — the two
     // exploded verify scans and their groupBy disappear.
-    graft.functions.WordGrams.register(spark)
     val dg = Parallel.spread(docs)
       .select($"doc_id",
-        expr("word_grams(split(text, ' '), 3)").as("grams"))
+        wordGrams(split($"text", " "), 3).as("grams"))
       .localCheckpoint() // 3 consumers: prefix path + both verify sides
     val tok = dg.select($"doc_id",
       size($"grams").cast("long").as("n"), explode($"grams").as("token"))
@@ -1195,10 +1193,9 @@ object CorpusStats {
       val docs = base.unionByName(
         base.filter($"doc_id" < 25)
           .select(($"doc_id" + 1000000L).as("doc_id"), $"source", $"text"))
-      graft.functions.WordGrams.register(spark)
       val g = docs
         .select($"doc_id", $"source",
-          explode(expr("word_grams(split(text, ' '), 3)")).as("gram"))
+          explode(wordGrams(split($"text", " "), 3)).as("gram"))
       val df = g.groupBy($"gram").agg(count(lit(1)).as("gdf"))
       val cov = g.join(df, "gram")
         .groupBy($"doc_id", $"source")

@@ -359,14 +359,15 @@ object GraphOps {
               ($"pb" + $"k".cast("long") * lit(10000000L)).as("pb"))
         val verts = und.select($"pa".as("v"))
           .unionByName(und.select($"pb".as("v"))).distinct()
-        // r15 (guide §2.4, the mkPagerank co-partitioning idiom), ×10
-        // twin only: hash-partition the edge list on src BEFORE its
-        // checkpoint so no round re-shuffles + re-sorts it (the label
-        // side exits its per-round window partitioned by the same key;
-        // shuffle_hash kills the sorts). A/B: xxl 5.8 → 4.3-4.8 s; the
-        // 1× variant measured ~0.3 s WORSE (the extra repartition of a
-        // small edge list outweighs 3 small saved shuffles), so the
-        // declared query keeps the r14 shape.
+        // r15 (guide §2.4, the mkPagerank idiom), ×10 twin only:
+        // hash-partition the edge list on src BEFORE its checkpoint,
+        // meant to keep it partitioned like the label side (which exits
+        // its per-round window on the same key). With AQE on the
+        // checkpoint drops that partitioning, so the edge list is still
+        // re-shuffled every round (Parallel's doc); shuffle_hash kills
+        // the sorts. A/B: xxl 5.8 → 4.3-4.8 s; the 1× variant measured
+        // ~0.3 s WORSE (the extra repartition of a small edge list costs
+        // more than it saves), so the declared query keeps the r14 shape.
         val e0 = und.select($"pa".as("src"), $"pb".as("dst"))
           .unionByName(und.select($"pb".as("src"), $"pa".as("dst")))
           .unionByName(verts.select($"v".as("src"), $"v".as("dst")))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
+import graft.functions.dotProduct
 
 /** LLM-training-data pipeline operators (SURVEY.md §2.B.8): deduplication,
   * text analysis, document fingerprinting, similarity search, multimodal
@@ -304,13 +305,6 @@ object LlmOps {
       ORDER BY doc1, doc2"""),
   )
 
-  /** Dot product of two double-array columns via the codegen'd native
-    * expression (graft.functions.DotProduct) — same sequential fold order
-    * as DuckDB's list_inner_product, so the doubles match bit-for-bit.
-    * Callers must DotProduct.register(spark) first. */
-  private def dotExpr(aCol: String, bCol: String): Column =
-    expr(s"dot_product($aCol, $bCol)")
-
   /** Brute-force cosine top-k: bounded probe set (10 vectors) against the
     * full corpus via broadcast — the correctness oracle for the LSH/ANN
     * path in graft.llm.Ann. Ranking is on the ROUNDED score so a 1-ulp
@@ -319,21 +313,20 @@ object LlmOps {
     "q_sim_topk",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       // norms are computed once per VECTOR (not once per pair): at scale
       // this saves |corpus| norm folds per probe; the doubles are
       // identical either way, so the oracle still matches.
       val emb = Tables.embeddings(spark, dir)
         .select($"vec_id", expr("transform(embedding, x -> cast(x as double))")
           .as("emb"))
-        .withColumn("norm", sqrt(dotExpr("emb", "emb")))
+        .withColumn("norm", sqrt(dotProduct($"emb", $"emb")))
       val probes = emb.filter($"vec_id" < 10)
         .select($"vec_id".as("p_id"), $"emb".as("p_emb"), $"norm".as("p_norm"))
       val corpus = emb.select($"vec_id".as("c_id"), $"emb".as("c_emb"),
         $"norm".as("c_norm"))
       val scored = corpus.crossJoin(broadcast(probes))
         .select($"p_id", $"c_id",
-          r6(dotExpr("p_emb", "c_emb") / ($"p_norm" * $"c_norm")).as("cos_sim"))
+          r6(dotProduct($"p_emb", $"c_emb") / ($"p_norm" * $"c_norm")).as("cos_sim"))
       val w = Window.partitionBy($"p_id").orderBy($"cos_sim".desc, $"c_id")
       scored.withColumn("rnk", row_number().over(w))
         .filter($"rnk" <= 5)
@@ -364,11 +357,10 @@ object LlmOps {
     "q_multimodal",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val emb = Tables.embeddings(spark, dir)
         .select($"vec_id", $"label",
           expr("transform(embedding, x -> cast(x as double))").as("emb"))
-        .withColumn("norm", sqrt(dotExpr("emb", "emb")))
+        .withColumn("norm", sqrt(dotProduct($"emb", $"emb")))
       val probe = emb.filter($"vec_id" === 0)
         .select($"emb".as("probe_emb"), $"norm".as("probe_norm"))
       Tables.documents(spark, dir)
@@ -376,7 +368,7 @@ object LlmOps {
         .crossJoin(broadcast(probe))
         .filter($"label".isin(1, 2, 3) && $"text".contains("data"))
         .select($"doc_id", $"lang", $"label", $"n_chars",
-          r6(dotExpr("emb", "probe_emb") / ($"norm" * $"probe_norm"))
+          r6(dotProduct($"emb", $"probe_emb") / ($"norm" * $"probe_norm"))
             .as("cos_to_probe"))
         .orderBy($"doc_id")
     },
@@ -1940,8 +1932,9 @@ object LlmOps {
     *    identical sequence); the 256-row centroid table is
     *    localCheckpoint'd per round (the q_lpa cadence) so plan depth
     *    stays bounded; the exploded rows are checkpointed ONCE and
-    *    repartitioned on vec_id first (single-row-group fixture gotcha +
-    *    co-partitioned reuse across all 2·R consumers).
+    *    repartitioned on vec_id first (single-row-group fixture gotcha;
+    *    with AQE on the checkpoint drops the vec_id partitioning, so the
+    *    2·R consumers still shuffle it, see Parallel's doc).
     *
     * Cross-engine float determinism (the qPcaPower contract): every
     * staged term ((x−c)², x) is an IEEE double of magnitude < 25 ≪ 2³³ so

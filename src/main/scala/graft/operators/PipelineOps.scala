@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
+import graft.functions.{cdcChunks, ngramDigests, ngramStats, repetitionStats,
+  windowDigests}
 
 /** Training-data pipeline operators beyond dedup/quality (SURVEY.md
   * §2.B.8 extension, round 4): benchmark decontamination, repetition
@@ -53,11 +55,10 @@ object PipelineOps {
   private def decontamInputs(spark: org.apache.spark.sql.SparkSession,
       dir: String) = {
     import spark.implicits._
-    graft.functions.NgramDigests.register(spark)
     // fused gram->distinct->md5 kernel (one pass per row, 32-byte shuffle
     // keys); byte-compatible with md5(concat_ws(...)) + array_distinct
     val g = tokens(Tables.documents(spark, dir))
-      .select($"doc_id", explode(expr("ngram_digests(l, 5)")).as("g"))
+      .select($"doc_id", explode(ngramDigests($"l", 5)).as("g"))
     val bench = g.filter($"doc_id" < 20).select($"g").distinct()
     val cand = g.filter($"doc_id" >= 20)
       .unionByName(g.filter($"doc_id" < 20)
@@ -126,9 +127,8 @@ object PipelineOps {
     "q_repetition",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.NgramStats.register(spark)
       tokens(Tables.documents(spark, dir))
-        .select($"doc_id", expr("ngram_stats(l, 3)").as("st"))
+        .select($"doc_id", ngramStats($"l", 3).as("st"))
         .filter($"st".getItem(0) > 0)
         .select($"doc_id", $"st".getItem(0).as("n_grams"),
           $"st".getItem(1).as("n_distinct"))
@@ -251,7 +251,6 @@ object PipelineOps {
     "q_filter_funnel",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.NgramStats.register(spark)
       val d = Tables.documents(spark, dir).select($"doc_id", $"text", $"source")
       val spam = ("spam " * 49) + "spam"
       val docs = d
@@ -262,7 +261,7 @@ object PipelineOps {
       docs
         .select($"source", split($"text", " ").as("l"))
         .select($"source", size($"l").as("n_tokens"),
-          expr("ngram_stats(l, 3)").as("st"),
+          ngramStats($"l", 3).as("st"),
           expr(s"size(filter(l, t -> t IN ($inList)))").as("n_stop"))
         .select($"source", $"n_tokens",
           when($"st".getItem(0) > 0,
@@ -1076,11 +1075,10 @@ object PipelineOps {
         base.filter($"doc_id" < 40 && size(split($"text", " ")) >= 30)
           .select(($"doc_id" + 500000L).as("doc_id"),
             concat(lit("qz qx qv "), $"text").as("text")))
-      graft.functions.WindowDigests.register(spark)
       val toks = docs.select($"doc_id", split($"text", " ").as("l"))
         .filter(size($"l") >= w)
       val wins = toks.select($"doc_id",
-          posexplode(expr(s"window_digests(l, $w)")))
+          posexplode(windowDigests($"l", w)))
         .toDF("doc_id", "pos", "wh")
       val dup = wins.groupBy($"wh")
         .agg(countDistinct($"doc_id").as("nd"))
@@ -1170,11 +1168,10 @@ object PipelineOps {
       base.filter($"doc_id" < 30 && size(split($"text", " ")) >= 30)
         .select(($"doc_id" + 870000L).as("doc_id"),
           concat(lit("qz qx qv "), $"text").as("text")))
-    graft.functions.WindowDigests.register(spark)
     val toks = docs.select($"doc_id", split($"text", " ").as("l"))
       .filter(size($"l") >= w)
     val wins = toks.select($"doc_id",
-        posexplode(expr(s"window_digests(l, $w)")))
+        posexplode(windowDigests($"l", w)))
       .toDF("doc_id", "pos", "wh")
     val shared = wins.groupBy($"wh")
       .agg(countDistinct($"doc_id").as("nd"))
@@ -1481,11 +1478,10 @@ object PipelineOps {
     (spark, dir) => {
       import spark.implicits._
       val w = 5
-      graft.functions.WindowDigests.register(spark)
       val toks = tokens(Tables.documents(spark, dir))
         .filter(size($"l") >= w)
       val wins = toks.select($"doc_id",
-          posexplode(expr(s"window_digests(l, $w)")))
+          posexplode(windowDigests($"l", w)))
         .toDF("doc_id", "pos", "g")
       val bench = wins.filter($"doc_id" < 20).select($"g").distinct()
       val cand = wins.filter($"doc_id" >= 20)
@@ -1559,12 +1555,11 @@ object PipelineOps {
       val candDocs = base.filter($"doc_id" >= 20)
         .unionByName(base.filter($"doc_id" < 20)
           .select(($"doc_id" + 1000000L).as("doc_id"), $"text"))
-      graft.functions.WindowDigests.register(spark)
       def winsOf(d: DataFrame) = d
         .select($"doc_id", split($"text", " ").as("l"))
         .filter(size($"l") >= w)
         .select($"doc_id",
-          posexplode(expr(s"window_digests(l, $w)")))
+          posexplode(windowDigests($"l", w)))
         .toDF("doc_id", "pos", "g")
       val bench = winsOf(base.filter($"doc_id" < 20)).select($"g").distinct()
       val runs = winsOf(candDocs).join(bench, Seq("g"), "left_semi")
@@ -2160,11 +2155,10 @@ object PipelineOps {
     "q_contam_matrix",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.NgramDigests.register(spark)
       val g = Tables.documents(spark, dir)
         .select($"source", $"doc_id", split($"text", " ").as("l"))
         .select($"source", $"doc_id",
-          explode(expr("ngram_digests(l, 5)")).as("g"))
+          explode(ngramDigests($"l", 5)).as("g"))
       val bench = g.filter($"doc_id" < 20)
         .select(($"doc_id" % 4).cast("int").as("shard"), $"g").distinct()
       val cand = g.filter($"doc_id" >= 20)
@@ -2934,10 +2928,9 @@ object PipelineOps {
     * 100 TB shape. Row-for-row equal to
     * [[repetitionRuleFlagsRelational]] (RepetitionStatsSpec). */
   def repetitionRuleFlags(docs: DataFrame): DataFrame = {
-    graft.functions.RepetitionStats.register(docs.sparkSession)
     docs
       .select(col("source"), col("doc_id"),
-        expr("repetition_stats(text)").as("st"))
+        repetitionStats(col("text")).as("st"))
       .select(col("source"), col("doc_id"),
         (col("st")(2) * 10L <= col("st")(1) * 3L).cast("long").as("r_line"),
         (col("st")(4) * 10L <= col("st")(3) * 3L).cast("long").as("r_para"),
@@ -3444,10 +3437,9 @@ object PipelineOps {
     * sides) and the table is tiny (≤ |tokens|/8 rows per doc). */
   private[graft] def cdcChunkDigests(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    graft.functions.CdcChunks.register(docs.sparkSession)
     Parallel.spread(docs)
       .select($"doc_id",
-        explode(expr("cdc_chunks(split(text, ' '))")).as("c"))
+        explode(cdcChunks(split(col("text"), " "))).as("c"))
       .select($"doc_id", $"c.ch".as("ch"), $"c.tok".as("tok"))
       .localCheckpoint()
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
+import graft.functions.wordGrams
 
 /** Corpus-quality and heavy-tail audits (SURVEY.md §2.B.8 extension,
   * round 7): n-gram novelty attribution, readability scoring, Hill
@@ -33,10 +34,9 @@ object QualityOps {
       // and the keep-first WINDOW min (r12 idiom) instead of
       // groupBy+self-join — the gram explode now runs once instead of
       // twice and one exchange replaces two.
-      graft.functions.WordGrams.register(spark)
       val g = Parallel.spread(Tables.documents(spark, dir))
         .select($"doc_id",
-          explode(expr("word_grams(split(text, ' '), 3)")).as("gram"))
+          explode(wordGrams(split($"text", " "), 3)).as("gram"))
       g.withColumn("first_doc", min($"doc_id").over(
           org.apache.spark.sql.expressions.Window.partitionBy($"gram")))
         .groupBy($"doc_id")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.engine.{GQuery, Tables}
 import graft.engine.GQuery._
+import graft.functions.dotProduct
 
 /** Retrieval-ranking metrics (NDCG@10, MRR) over the brute-force cosine
   * ranking that q_sim_topk established as the engine's retrieval
@@ -30,11 +31,10 @@ object RankOps {
     * by q_ndcg and q_mrr; the SQL twin below must stay in lockstep. */
   private def rankedTop10(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.DotProduct.register(spark)
     val emb = Tables.embeddings(spark, dir)
       .select($"vec_id", $"label",
         expr("transform(embedding, x -> cast(x as double))").as("emb"))
-      .withColumn("norm", sqrt(expr("dot_product(emb, emb)")))
+      .withColumn("norm", sqrt(dotProduct($"emb", $"emb")))
     val probes = emb.filter($"vec_id" < 10)
       .select($"vec_id".as("p_id"), $"label".as("p_label"),
         $"emb".as("p_emb"), $"norm".as("p_norm"))
@@ -44,7 +44,7 @@ object RankOps {
     val scored = corpus.crossJoin(broadcast(probes))
       .select($"p_id", $"c_id",
         when($"p_label" === $"c_label", 1L).otherwise(0L).as("rel"),
-        r6(expr("dot_product(p_emb, c_emb)") / ($"p_norm" * $"c_norm"))
+        r6(dotProduct($"p_emb", $"c_emb") / ($"p_norm" * $"c_norm"))
           .as("cos_sim"))
     val w = Window.partitionBy($"p_id").orderBy($"cos_sim".desc, $"c_id")
     scored.withColumn("rnk", row_number().over(w)).filter($"rnk" <= 10)
@@ -176,19 +176,18 @@ object RankOps {
     "q_rrf",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val bound = 500L
       val emb = Tables.embeddings(spark, dir)
         .filter($"vec_id" < bound)
         .select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("emb"))
-        .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+        .withColumn("nrm", sqrt(dotProduct($"emb", $"emb")))
       val probesV = emb.filter($"vec_id" < 5)
         .select($"vec_id".as("p_id"), $"emb".as("p_emb"), $"nrm".as("p_nrm"))
       val wv = Window.partitionBy($"p_id").orderBy($"cos".desc, $"c_id")
       val rankVec = emb.filter($"vec_id" >= 5).crossJoin(broadcast(probesV))
         .select($"p_id", $"vec_id".as("c_id"),
-          r6(expr("dot_product(p_emb, emb)") / ($"p_nrm" * $"nrm")).as("cos"))
+          r6(dotProduct($"p_emb", $"emb") / ($"p_nrm" * $"nrm")).as("cos"))
         .withColumn("vr", row_number().over(wv))
         .filter($"vr" <= 10)
         .select($"p_id", $"c_id", $"vr")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{GQuery, Parallel, Tables}
 import graft.engine.GQuery._
+import graft.functions.{dotProduct, minhashSig, wordGrams}
 
 /** Scale-path operators under the FULL hash-match oracle (SURVEY.md §2.B.8
   * ◻ set, promoted from rows-only in round 6): MinHash signature-estimate
@@ -108,10 +109,9 @@ object ScaleOps {
     * recompute for multi-consumer signature tables, r11 PerfProbe). */
   private[operators] def kernelSigs(docs: DataFrame,
       extraCols: String*): DataFrame = {
-    graft.functions.MinHashSig.register(docs.sparkSession)
     val keep = "doc_id" +: extraCols
     Parallel.spread(docs)
-      .select(keep.map(col) :+ expr("minhash_sig(split(text, ' '))").as("mh"): _*)
+      .select(keep.map(col) :+ minhashSig(split(col("text"), " ")).as("mh"): _*)
       .filter(size(col("mh")) === 16)
       .select(keep.map(col) ++ (0 until 16).map(i =>
         element_at(col("mh"), i + 1).as(s"h$i")): _*)
@@ -196,7 +196,6 @@ object ScaleOps {
     "q_mrl_recall",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val dims = Seq(16, 32, 64)
       val emb = Tables.embeddings(spark, dir)
         .filter($"vec_id" < corpusBound)
@@ -205,10 +204,9 @@ object ScaleOps {
       val probes = emb.filter($"vec_id" < 5)
         .select($"vec_id".as("p_id"), $"emb".as("p_emb"))
       def cosD(d: Int): Column =
-        (expr(s"dot_product(slice(emb, 1, $d), slice(p_emb, 1, $d))") /
-          (sqrt(expr(s"dot_product(slice(emb, 1, $d), slice(emb, 1, $d))")) *
-            sqrt(expr(
-              s"dot_product(slice(p_emb, 1, $d), slice(p_emb, 1, $d))"))))
+        (dotProduct(slice($"emb", 1, d), slice($"p_emb", 1, d)) /
+          (sqrt(dotProduct(slice($"emb", 1, d), slice($"emb", 1, d))) *
+            sqrt(dotProduct(slice($"p_emb", 1, d), slice($"p_emb", 1, d)))))
           .as(s"c$d")
       val scored = emb.crossJoin(broadcast(probes))
         .select(($"p_id" +: $"vec_id".as("c_id") +: dims.map(cosD)): _*)
@@ -813,16 +811,14 @@ object ScaleOps {
     "q_ann_lsh",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val emb = Tables.embeddings(spark, dir)
         .filter($"vec_id" < corpusBound)
         .select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("emb"))
-        .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+        .withColumn("nrm", sqrt(dotProduct($"emb", $"emb")))
       val projected = (0 until 16).foldLeft(emb) { (df, j) =>
         df.withColumn(s"p$j",
-          expr(s"dot_product(emb, ${planes(j).map(w => s"${w}D")
-            .mkString("array(", ", ", ")")})"))
+          dotProduct($"emb", array(planes(j).map(lit): _*)))
       }
       val sig = projected.select(
         ($"vec_id" +: $"emb" +: $"nrm" +:
@@ -842,7 +838,7 @@ object ScaleOps {
       val w = Window.partitionBy($"p_id").orderBy($"cos".desc, $"c_id")
       cand.join(broadcast(p), "p_id").join(c, "c_id")
         .withColumn("cos",
-          expr("dot_product(p_emb, c_emb)") / ($"p_nrm" * $"c_nrm"))
+          dotProduct($"p_emb", $"c_emb") / ($"p_nrm" * $"c_nrm"))
         .withColumn("rnk", row_number().over(w))
         .filter($"rnk" <= 5)
         .select($"p_id", $"c_id", r6($"cos").as("cos_sim"), $"rnk")
@@ -900,32 +896,31 @@ object ScaleOps {
     name,
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val emb = Tables.embeddings(spark, dir)
         .filter($"vec_id" < corpusBound)
         .select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("emb"))
-        .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+        .withColumn("nrm", sqrt(dotProduct($"emb", $"emb")))
       val cents = emb.orderBy(idHash($"vec_id"), $"vec_id").limit(nCentroids)
         .select($"vec_id".as("cell"), $"emb".as("cent"), $"nrm".as("cent_nrm"))
       val assignW = Window.partitionBy($"vec_id").orderBy($"cell_cos".desc, $"cell")
       val assigned = emb.crossJoin(broadcast(cents))
         .withColumn("cell_cos",
-          expr("dot_product(emb, cent)") / ($"nrm" * $"cent_nrm"))
+          dotProduct($"emb", $"cent") / ($"nrm" * $"cent_nrm"))
         .withColumn("rn", row_number().over(assignW))
         .filter($"rn" === 1)
         .select($"vec_id".as("c_id"), $"emb".as("c_emb"), $"nrm".as("c_nrm"), $"cell")
       val probeW = Window.partitionBy($"vec_id").orderBy($"cell_cos".desc, $"cell")
       val probeCells = emb.filter($"vec_id" < 5).crossJoin(broadcast(cents))
         .withColumn("cell_cos",
-          expr("dot_product(emb, cent)") / ($"nrm" * $"cent_nrm"))
+          dotProduct($"emb", $"cent") / ($"nrm" * $"cent_nrm"))
         .withColumn("rn", row_number().over(probeW))
         .filter($"rn" <= 3)
         .select($"vec_id".as("p_id"), $"emb".as("p_emb"), $"nrm".as("p_nrm"), $"cell")
       val w = Window.partitionBy($"p_id").orderBy($"cos".desc, $"c_id")
       assigned.join(broadcast(probeCells), "cell")
         .withColumn("cos",
-          expr("dot_product(p_emb, c_emb)") / ($"p_nrm" * $"c_nrm"))
+          dotProduct($"p_emb", $"c_emb") / ($"p_nrm" * $"c_nrm"))
         .withColumn("rnk", row_number().over(w))
         .filter($"rnk" <= 5)
         .select($"p_id", $"c_id", $"cell", r6($"cos").as("cos_sim"), $"rnk")
@@ -991,7 +986,6 @@ object ScaleOps {
     "q_neardup_cosine",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val base = Tables.embeddings(spark, dir)
         .filter($"vec_id" < corpusBound)
         .select($"vec_id", $"embedding")
@@ -1000,11 +994,10 @@ object ScaleOps {
           .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding"))
         .select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("emb"))
-        .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+        .withColumn("nrm", sqrt(dotProduct($"emb", $"emb")))
       val projected = (0 until 16).foldLeft(corpus) { (df, j) =>
         df.withColumn(s"p$j",
-          expr(s"dot_product(emb, ${planes(j).map(w => s"${w}D")
-            .mkString("array(", ", ", ")")})"))
+          dotProduct($"emb", array(planes(j).map(lit): _*)))
       }
       val sig = projected.select(
         ($"vec_id" +: $"emb" +: $"nrm" +:
@@ -1025,7 +1018,7 @@ object ScaleOps {
       val b = sig.select($"vec_id".as("id_b"), $"emb".as("b_emb"), $"nrm".as("b_nrm"))
       cand.join(a, "id_a").join(b, "id_b")
         .withColumn("cos",
-          expr("dot_product(a_emb, b_emb)") / ($"a_nrm" * $"b_nrm"))
+          dotProduct($"a_emb", $"b_emb") / ($"a_nrm" * $"b_nrm"))
         .filter($"cos" >= 0.95)
         .select($"id_a", $"id_b", r6($"cos").as("cos_sim"))
         .orderBy($"id_a", $"id_b")
@@ -1082,7 +1075,6 @@ object ScaleOps {
     "q_neardup_embed",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val base = Tables.embeddings(spark, dir)
         .filter($"vec_id" < corpusBound)
         .select($"vec_id", $"embedding")
@@ -1091,7 +1083,7 @@ object ScaleOps {
           .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding"))
         .select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("emb"))
-        .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+        .withColumn("nrm", sqrt(dotProduct($"emb", $"emb")))
       // centroids from the UNplanted corpus only: the quantizer is part
       // of the standing index, not of the batch being checked
       val cents = corpus.filter($"vec_id" < corpusBound)
@@ -1101,7 +1093,7 @@ object ScaleOps {
         .orderBy($"cell_cos".desc, $"cell")
       val blocked = corpus.crossJoin(broadcast(cents))
         .withColumn("cell_cos",
-          expr("dot_product(emb, cent)") / ($"nrm" * $"cent_nrm"))
+          dotProduct($"emb", $"cent") / ($"nrm" * $"cent_nrm"))
         .withColumn("rn", row_number().over(assignW))
         .filter($"rn" <= 2)
         .select($"vec_id", $"cell")
@@ -1116,7 +1108,7 @@ object ScaleOps {
         $"nrm".as("b_nrm"))
       cand.join(a, "id_a").join(b, "id_b")
         .withColumn("cos",
-          expr("dot_product(a_emb, b_emb)") / ($"a_nrm" * $"b_nrm"))
+          dotProduct($"a_emb", $"b_emb") / ($"a_nrm" * $"b_nrm"))
         .filter($"cos" >= 0.95)
         .select($"id_a", $"id_b", r6($"cos").as("cos_sim"))
         .orderBy($"id_a", $"id_b")
@@ -1276,16 +1268,14 @@ object ScaleOps {
     "q_hard_negatives",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val emb = Tables.embeddings(spark, dir)
         .filter($"vec_id" < corpusBound)
         .select($"vec_id", $"label",
           expr("transform(embedding, x -> cast(x as double))").as("emb"))
-        .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+        .withColumn("nrm", sqrt(dotProduct($"emb", $"emb")))
       val projected = (0 until 16).foldLeft(emb) { (df, j) =>
         df.withColumn(s"p$j",
-          expr(s"dot_product(emb, ${planes(j).map(w => s"${w}D")
-            .mkString("array(", ", ", ")")})"))
+          dotProduct($"emb", array(planes(j).map(lit): _*)))
       }
       val sig = projected.select(
         ($"vec_id" +: $"label" +: $"emb" +: $"nrm" +:
@@ -1309,7 +1299,7 @@ object ScaleOps {
         .orderBy($"cos".desc, $"c_id")
       cand.join(broadcast(pr), "p_id").join(cr, "c_id")
         .withColumn("cos",
-          expr("dot_product(p_emb, c_emb)") / ($"p_nrm" * $"c_nrm"))
+          dotProduct($"p_emb", $"c_emb") / ($"p_nrm" * $"c_nrm"))
         .withColumn("same", $"p_label" === $"c_label")
         .withColumn("rn", row_number().over(w))
         .filter($"rn" === 1)
@@ -1531,10 +1521,9 @@ object ScaleOps {
       val docs = base.unionByName(
         base.filter($"doc_id" < 50)
           .select(($"doc_id" + 1000000L).as("doc_id"), $"text"))
-      graft.functions.WordGrams.register(spark)
       val g = docs
         .select($"doc_id",
-          explode(expr("word_grams(split(text, ' '), 3)")).as("gram"))
+          explode(wordGrams(split($"text", " "), 3)).as("gram"))
       // fused-kernel signature stage (byte-identical to the relational
       // oracle stage below; see kernelSigs / MinHashSigSpec); the gram
       // table g stays — the exact-Jaccard verify pass needs it
@@ -1653,19 +1642,18 @@ object ScaleOps {
     "q_knn_classify",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val base = Tables.embeddings(spark, dir)
         .filter($"vec_id" < corpusBound)
         .select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("emb"),
           $"label")
-        .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+        .withColumn("nrm", sqrt(dotProduct($"emb", $"emb")))
       val probes = base.filter($"vec_id" < 25)
         .select($"vec_id".as("pid"), $"emb".as("p_emb"),
           $"nrm".as("p_nrm"), $"label".as("true_label"))
       val scored = base.join(broadcast(probes), $"vec_id" =!= $"pid")
         .select($"pid", $"true_label", $"vec_id", $"label",
-          (expr("dot_product(emb, p_emb)") / ($"nrm" * $"p_nrm")).as("cos"))
+          (dotProduct($"emb", $"p_emb") / ($"nrm" * $"p_nrm")).as("cos"))
       val top5 = scored
         .withColumn("rk", row_number().over(
           Window.partitionBy($"pid").orderBy($"cos".desc, $"vec_id")))
@@ -1734,10 +1722,9 @@ object ScaleOps {
       val batch = base.filter($"doc_id" >= 400)
         .unionByName(base.filter($"doc_id" < 40)
           .select(($"doc_id" + 2000000L).as("doc_id"), $"text"))
-      graft.functions.WordGrams.register(spark)
       def grams(docs: org.apache.spark.sql.DataFrame) = docs
         .select($"doc_id",
-          explode(expr("word_grams(split(text, ' '), 3)")).as("gram"))
+          explode(wordGrams(split($"text", " "), 3)).as("gram"))
       def bands(s: org.apache.spark.sql.DataFrame) = {
         val bandStructs = (0 until 4).map(b =>
           struct(lit(b).as("band_id"),
@@ -1916,7 +1903,6 @@ object ScaleOps {
     "q_energy_dist",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val emb = Tables.embeddings(spark, dir)
         .filter($"label".isin(0, 1))
         .select($"vec_id", $"label",
@@ -1924,7 +1910,7 @@ object ScaleOps {
         .withColumn("rn", row_number().over(
           Window.partitionBy($"label").orderBy($"vec_id")))
         .filter($"rn" <= 40)
-        .withColumn("nsq", expr("dot_product(e, e)"))
+        .withColumn("nsq", dotProduct($"e", $"e"))
         .localCheckpoint()
       val x = emb.filter($"label" === 0)
         .select($"vec_id".as("xid"), $"e".as("xe"), $"nsq".as("xn"))
@@ -1933,17 +1919,17 @@ object ScaleOps {
       def dist(n1: Column, n2: Column, dot: Column): Column =
         rN(sqrt(greatest(n1 + n2 - lit(2.0) * dot, lit(0.0))), 6)
       val a = x.crossJoin(broadcast(y))
-        .select(dist($"xn", $"yn", expr("dot_product(xe, ye)")).as("d"))
+        .select(dist($"xn", $"yn", dotProduct($"xe", $"ye")).as("d"))
         .agg(count(lit(1)).as("n_ab"), dsum($"d", 6).as("s_ab"))
       val b = x.as("p").join(broadcast(x.as("q")),
           col("p.xid") < col("q.xid"))
         .select(dist(col("p.xn"), col("q.xn"),
-          expr("dot_product(p.xe, q.xe)")).as("d"))
+          dotProduct($"p.xe", $"q.xe")).as("d"))
         .agg(count(lit(1)).as("n_xx"), dsum($"d", 6).as("s_xx"))
       val c = y.as("p").join(broadcast(y.as("q")),
           col("p.yid") < col("q.yid"))
         .select(dist(col("p.yn"), col("q.yn"),
-          expr("dot_product(p.ye, q.ye)")).as("d"))
+          dotProduct($"p.ye", $"q.ye")).as("d"))
         .agg(count(lit(1)).as("n_yy"), dsum($"d", 6).as("s_yy"))
       val dd = (c: String) => col(c).cast("double")
       a.crossJoin(broadcast(b)).crossJoin(broadcast(c))
@@ -2008,16 +1994,14 @@ object ScaleOps {
     "q_ann_recall",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val emb = Tables.embeddings(spark, dir)
         .filter($"vec_id" < corpusBound)
         .select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("emb"))
-        .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+        .withColumn("nrm", sqrt(dotProduct($"emb", $"emb")))
       val projected = (0 until 16).foldLeft(emb) { (df, j) =>
         df.withColumn(s"p$j",
-          expr(s"dot_product(emb, ${planes(j).map(w => s"${w}D")
-            .mkString("array(", ", ", ")")})"))
+          dotProduct($"emb", array(planes(j).map(lit): _*)))
       }
       val sig = projected.select(
         ($"vec_id" +: $"emb" +: $"nrm" +:
@@ -2046,7 +2030,7 @@ object ScaleOps {
       val exact = c.crossJoin(broadcast(p))
         .filter($"c_id" =!= $"p_id")
         .withColumn("cos",
-          r6(expr("dot_product(p_emb, c_emb)") / ($"p_nrm" * $"c_nrm")))
+          r6(dotProduct($"p_emb", $"c_emb") / ($"p_nrm" * $"c_nrm")))
         .withColumn("rnk", row_number().over(w))
         .filter($"rnk" <= 10)
         .select($"p_id", $"c_id")
@@ -2121,19 +2105,18 @@ object ScaleOps {
     "q_ann_ivf_probe",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val emb = Tables.embeddings(spark, dir)
         .filter($"vec_id" < corpusBound)
         .select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("emb"))
-        .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+        .withColumn("nrm", sqrt(dotProduct($"emb", $"emb")))
       val cents = emb.orderBy(idHash($"vec_id"), $"vec_id").limit(nCentroids)
         .select($"vec_id".as("cell"), $"emb".as("cent"), $"nrm".as("cent_nrm"))
       val assignW = Window.partitionBy($"vec_id")
         .orderBy($"cell_cos".desc, $"cell")
       val assigned = emb.crossJoin(broadcast(cents))
         .withColumn("cell_cos",
-          expr("dot_product(emb, cent)") / ($"nrm" * $"cent_nrm"))
+          dotProduct($"emb", $"cent") / ($"nrm" * $"cent_nrm"))
         .withColumn("rn", row_number().over(assignW))
         .filter($"rn" === 1)
         .select($"vec_id".as("c_id"), $"cell")
@@ -2141,7 +2124,7 @@ object ScaleOps {
         .orderBy($"cell_cos".desc, $"cell")
       val probeCells = emb.filter($"vec_id" < 5).crossJoin(broadcast(cents))
         .withColumn("cell_cos",
-          expr("dot_product(emb, cent)") / ($"nrm" * $"cent_nrm"))
+          dotProduct($"emb", $"cent") / ($"nrm" * $"cent_nrm"))
         .withColumn("rn", row_number().over(probeW))
         .filter($"rn" <= 3)
         .select($"vec_id".as("p_id"), $"cell", $"rn")
@@ -2158,7 +2141,7 @@ object ScaleOps {
       val exact = emb.crossJoin(broadcast(p))
         .filter($"vec_id" =!= $"p_id")
         .withColumn("cos",
-          r6(expr("dot_product(p_emb, emb)") / ($"p_nrm" * $"nrm")))
+          r6(dotProduct($"p_emb", $"emb") / ($"p_nrm" * $"nrm")))
         .withColumn("rnk", row_number().over(w))
         .filter($"rnk" <= 10)
         .select($"p_id", $"vec_id".as("c_id"))
@@ -2263,7 +2246,6 @@ object ScaleOps {
     name,
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val base = Tables.embeddings(spark, dir)
         .filter($"vec_id" < corpusBound)
         .select($"vec_id", $"embedding")
@@ -2272,7 +2254,7 @@ object ScaleOps {
           .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding"))
         .select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("emb"))
-        .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+        .withColumn("nrm", sqrt(dotProduct($"emb", $"emb")))
       val cents = corpus.filter($"vec_id" < corpusBound)
         .orderBy(idHash($"vec_id"), $"vec_id").limit(nCentroids)
         .select($"vec_id".as("cell"), $"emb".as("cent"), $"nrm".as("cent_nrm"))
@@ -2280,7 +2262,7 @@ object ScaleOps {
         .orderBy($"cell_cos".desc, $"cell")
       val blocked = corpus.crossJoin(broadcast(cents))
         .withColumn("cell_cos",
-          expr("dot_product(emb, cent)") / ($"nrm" * $"cent_nrm"))
+          dotProduct($"emb", $"cent") / ($"nrm" * $"cent_nrm"))
         .withColumn("rn", row_number().over(assignW))
         .filter($"rn" === 1)
         .select($"vec_id", $"cell", $"emb", $"nrm")
@@ -2292,7 +2274,7 @@ object ScaleOps {
       val dropped = blocked.as("d").join(blocked.as("k"),
           col("d.cell") === col("k.cell") &&
             col("k.vec_id") < col("d.vec_id") &&
-            expr("dot_product(d.emb, k.emb)") / (col("d.nrm") * col("k.nrm"))
+            dotProduct($"d.emb", $"k.emb") / (col("d.nrm") * col("k.nrm"))
               >= lit(0.97),
           "leftsemi")
         .select(col("vec_id"), col("cell"))
@@ -2750,12 +2732,11 @@ object ScaleOps {
     "q_ann_incr",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val base = Tables.embeddings(spark, dir)
         .filter($"vec_id" < corpusBound)
         .select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("emb"))
-        .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+        .withColumn("nrm", sqrt(dotProduct($"emb", $"emb")))
       val corpus = base.withColumn("is_new", lit(0L))
         .unionByName(base.filter($"vec_id" < 100)
           .select(($"vec_id" + 2000000L).as("vec_id"), $"emb", $"nrm")
@@ -2766,7 +2747,7 @@ object ScaleOps {
         .orderBy($"cell_cos".desc, $"cell")
       corpus.crossJoin(broadcast(cents))
         .withColumn("cell_cos",
-          expr("dot_product(emb, cent)") / ($"nrm" * $"cent_nrm"))
+          dotProduct($"emb", $"cent") / ($"nrm" * $"cent_nrm"))
         .withColumn("rn", row_number().over(assignW))
         .filter($"rn" === 1)
         .groupBy($"cell")
@@ -2965,17 +2946,16 @@ object ScaleOps {
     "q_cosine_hist",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val emb = Tables.embeddings(spark, dir)
         .select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("emb"))
-        .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+        .withColumn("nrm", sqrt(dotProduct($"emb", $"emb")))
       val a = emb.select($"vec_id", $"emb".as("ea"), $"nrm".as("na"))
       val b = emb.select(($"vec_id" - 1L).as("vec_id"),
         $"emb".as("eb"), $"nrm".as("nb"))
       a.join(b, "vec_id")
         .withColumn("cos",
-          expr("dot_product(ea, eb)") / ($"na" * $"nb"))
+          dotProduct($"ea", $"eb") / ($"na" * $"nb"))
         .withColumn("bin",
           least(greatest(floor($"cos" * lit(10.0)), lit(-10.0)), lit(9.0))
             .cast("int"))
@@ -3021,19 +3001,18 @@ object ScaleOps {
     "q_cell_balance",
     (spark, dir) => {
       import spark.implicits._
-      graft.functions.DotProduct.register(spark)
       val emb = Tables.embeddings(spark, dir)
         .filter($"vec_id" < corpusBound)
         .select($"vec_id",
           expr("transform(embedding, x -> cast(x as double))").as("emb"))
-        .withColumn("nrm", sqrt(expr("dot_product(emb, emb)")))
+        .withColumn("nrm", sqrt(dotProduct($"emb", $"emb")))
       val cents = emb.orderBy(idHash($"vec_id"), $"vec_id").limit(nCentroids)
         .select($"vec_id".as("cell"), $"emb".as("cent"), $"nrm".as("cent_nrm"))
       val assignW = Window.partitionBy($"vec_id")
         .orderBy($"cell_cos".desc, $"cell")
       val cells = emb.crossJoin(broadcast(cents))
         .withColumn("cell_cos",
-          expr("dot_product(emb, cent)") / ($"nrm" * $"cent_nrm"))
+          dotProduct($"emb", $"cent") / ($"nrm" * $"cent_nrm"))
         .withColumn("rn", row_number().over(assignW))
         .filter($"rn" === 1)
         .groupBy($"cell")

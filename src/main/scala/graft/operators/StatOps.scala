@@ -347,14 +347,15 @@ object StatOps {
         // e is referenced by all 8 iterations — checkpoint it as well (off
         // the cheap checkpointed und, this job is milliseconds) so the
         // per-iteration lineage is a flat scan, not union+distinct chains.
-        // r15 (guide §2.4, the mkPagerank co-partitioning idiom), ×10
-        // twin only: hash-partition the edge list on src BEFORE the
-        // checkpoint so none of the 8 iterations re-shuffles or re-sorts
-        // it — the label table exits each groupBy(dst) partitioned by
-        // the same key, and shuffle_hash on that (small) side avoids SMJ
-        // sorts. A/B at 1× measured ~0.3-0.5 s WORSE (the repartition of
-        // a small edge list costs more than 8 small saved shuffles), so
-        // the declared query keeps the r14 shape.
+        // r15 (guide §2.4, the mkPagerank idiom), ×10 twin only:
+        // hash-partition the edge list on src BEFORE the checkpoint,
+        // meant to match the label table, which exits each groupBy(dst)
+        // partitioned by the same key. With AQE on the checkpoint drops
+        // that partitioning, so each of the 8 iterations still
+        // re-shuffles the edge list (Parallel's doc); shuffle_hash on the
+        // (small) label side avoids SMJ sorts. A/B at 1× measured
+        // ~0.3-0.5 s WORSE (the repartition of a small edge list costs
+        // more than it saves), so the declared query keeps the r14 shape.
         val e0 = und.select($"pa".as("src"), $"pb".as("dst"))
           .unionByName(und.select($"pb".as("src"), $"pa".as("dst")))
           .unionByName(vs.select($"v".as("src"), $"v".as("dst")))

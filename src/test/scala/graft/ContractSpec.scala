@@ -116,9 +116,37 @@ class ContractSpec extends AnyFunSuite {
         hits.mkString("\n"))
   }
 
+  // Engine code calls a kernel through its typed graft.functions
+  // function, which builds the kernel's expression directly: no query
+  // registers a function on the session it runs in, so the registry a
+  // session holds never depends on which queries ran before. The SQL
+  // names exist only for SQL-text users (registerAllFunctions).
+  test("contract guard: engine code calls kernels only through graft.functions") {
+    val kernels = graft.functions.sqlFunctions.map(_._1)
+    // a kernel's SQL name called inside a string literal: an odd number
+    // of quotes before it on the line
+    val inString = (line: String) => kernels.exists { k =>
+      s"\\b$k\\(".r.findAllMatchIn(line).exists(m =>
+        line.substring(0, m.start).count(_ == '"') % 2 == 1)
+    }
+    val hits = Seq("operators", "llm", "ml").flatMap { d =>
+      val dir = s"src/main/scala/graft/$d"
+      // split so this file does not match
+      linesContaining(dir, Seq("." + "register(", "function" + "Registry")) ++
+        linesMatching(dir, inString)
+    }.distinct
+    assert(hits.isEmpty,
+      s"call kernels through their typed graft.functions function, not at:\n" +
+        hits.mkString("\n"))
+  }
+
   /** `file:line` of every line under `dir`'s Scala sources that contains
     * one of `needles`. */
-  private def linesContaining(dir: String, needles: Seq[String]): List[String] = {
+  private def linesContaining(dir: String, needles: Seq[String]): List[String] =
+    linesMatching(dir, line => needles.exists(line.contains))
+
+  /** `file:line` of every line under `dir`'s Scala sources that `matches`. */
+  private def linesMatching(dir: String, matches: String => Boolean): List[String] = {
     val files = {
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
@@ -127,7 +155,7 @@ class ContractSpec extends AnyFunSuite {
     files.sortBy(_.toString).flatMap { f =>
       val src = scala.io.Source.fromFile(f.toFile)
       try src.getLines().zipWithIndex.collect {
-        case (line, i) if needles.exists(line.contains) => s"$f:${i + 1}"
+        case (line, i) if matches(line) => s"$f:${i + 1}"
       }.toList
       finally src.close()
     }

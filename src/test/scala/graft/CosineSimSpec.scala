@@ -9,8 +9,7 @@ class CosineSimSpec extends AnyFunSuite {
 
   test("cosine_sim is bit-identical to the composed three-pass form") {
     import spark.implicits._
-    CosineSim.register(spark)
-    graft.functions.DotProduct.register(spark)
+    graft.functions.registerAllFunctions(spark)
     val emb = graft.engine.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select($"vec_id",
         expr("transform(embedding, x -> cast(x as double))").as("e"))
@@ -26,7 +25,7 @@ class CosineSimSpec extends AnyFunSuite {
 
   test("cosine_sim handles nulls, zero vectors, and length mismatch") {
     import spark.implicits._
-    CosineSim.register(spark)
+    graft.functions.registerAllFunctions(spark)
     val df = Seq(
       (Some(Seq(1.0, 0.0)), Some(Seq(1.0, 0.0))), // identical → 1.0
       (Some(Seq(1.0, 0.0)), Some(Seq(0.0, 1.0))), // orthogonal → 0.0
@@ -43,7 +42,7 @@ class CosineSimSpec extends AnyFunSuite {
 
   test("cosine_sim rejects wrong input types at analysis time") {
     import spark.implicits._
-    CosineSim.register(spark)
+    graft.functions.registerAllFunctions(spark)
     val df = Seq((1, "x")).toDF("a", "b")
     val ex = intercept[Exception] {
       df.select(expr("cosine_sim(a, b)")).collect()
@@ -57,7 +56,7 @@ class CosineSimSpec extends AnyFunSuite {
     val rows = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0)),
       (Seq(-1.0, 0.5), Seq(0.25, 8.0)))
-    CosineSim.register(spark)
+    graft.functions.registerAllFunctions(spark)
     rows.foreach { case (a, b) =>
       // interpreted: direct eval of the expression tree
       import org.apache.spark.sql.catalyst.expressions.Literal

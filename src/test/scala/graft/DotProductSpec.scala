@@ -2,14 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.DotProduct
 
 class DotProductSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
 
   test("dot_product is bit-identical to the higher-order fold") {
     import spark.implicits._
-    DotProduct.register(spark)
+    graft.functions.registerAllFunctions(spark)
     val emb = graft.engine.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select($"vec_id",
         expr("transform(embedding, x -> cast(x as double))").as("e"))
@@ -24,7 +23,7 @@ class DotProductSpec extends AnyFunSuite {
 
   test("dot_product handles nulls, empty and length-mismatched arrays") {
     import spark.implicits._
-    DotProduct.register(spark)
+    graft.functions.registerAllFunctions(spark)
     val df = Seq(
       (Some(Seq(1.0, 2.0)), Some(Seq(3.0, 4.0))),   // 11
       (Some(Seq(1.0, 2.0)), Some(Seq(3.0))),        // min-length: 3
@@ -38,7 +37,7 @@ class DotProductSpec extends AnyFunSuite {
 
   test("dot_product rejects wrong input types at analysis time") {
     import spark.implicits._
-    DotProduct.register(spark)
+    graft.functions.registerAllFunctions(spark)
     val df = Seq((1, "x")).toDF("a", "b")
     val ex = intercept[Exception] {
       df.select(expr("dot_product(a, b)")).collect()
@@ -49,7 +48,7 @@ class DotProductSpec extends AnyFunSuite {
 
   test("dot_product participates in whole-stage codegen") {
     import spark.implicits._
-    DotProduct.register(spark)
+    graft.functions.registerAllFunctions(spark)
     val emb = graft.engine.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(expr("transform(embedding, x -> cast(x as double))").as("e"))
     val plan = emb.select(expr("dot_product(e, e)").as("d"))

@@ -36,7 +36,7 @@ class MinHashSigSpec extends AnyFunSuite {
   }
 
   private def kernelSigs(docs: DataFrame): DataFrame = {
-    graft.functions.MinHashSig.register(docs.sparkSession)
+    graft.functions.registerAllFunctions(docs.sparkSession)
     docs
       .select(col("doc_id"), expr("minhash_sig(split(text, ' '))").as("mh"))
       .filter(size(col("mh")) === 16)
@@ -91,7 +91,7 @@ class MinHashSigSpec extends AnyFunSuite {
 
   test("single-gram doc: h values are the md5 hex substrings themselves") {
     import spark.implicits._
-    graft.functions.MinHashSig.register(spark)
+    graft.functions.registerAllFunctions(spark)
     val hs = Seq("a b c").toDF("text")
       .select(expr("minhash_sig(split(text, ' '))"))
       .collect()(0).getSeq[String](0)

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.NgramStats
 
 class NgramStatsSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -17,7 +16,7 @@ class NgramStatsSpec extends AnyFunSuite {
 
   test("ngram_stats equals the transform/array_distinct composition") {
     import spark.implicits._
-    NgramStats.register(spark)
+    graft.functions.registerAllFunctions(spark)
     val docs = graft.engine.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(split($"text", " ").as("l"))
     val diffs = docs
@@ -28,7 +27,7 @@ class NgramStatsSpec extends AnyFunSuite {
 
   test("ngram_stats edge cases: empty, shorter than n, all-repeated") {
     import spark.implicits._
-    NgramStats.register(spark)
+    graft.functions.registerAllFunctions(spark)
     val df = Seq(
       "",                 // 1 empty-string token -> shorter than n
       "a b",              // shorter than n=3
@@ -44,7 +43,7 @@ class NgramStatsSpec extends AnyFunSuite {
 
   test("ngram_stats codegen and interpreted paths agree") {
     import spark.implicits._
-    NgramStats.register(spark)
+    graft.functions.registerAllFunctions(spark)
     val docs = graft.engine.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(split($"text", " ").as("l"))
     def total() = docs.select(expr("ngram_stats(l, 2)").as("s"))
@@ -59,7 +58,7 @@ class NgramStatsSpec extends AnyFunSuite {
 
   test("ngram_digests equals md5-of-composed-grams as a set, per row") {
     import spark.implicits._
-    graft.functions.NgramDigests.register(spark)
+    graft.functions.registerAllFunctions(spark)
     val docs = graft.engine.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(split($"text", " ").as("l"))
     val g = "transform(sequence(1, size(l) - 4), " +
@@ -75,7 +74,7 @@ class NgramStatsSpec extends AnyFunSuite {
 
   test("ngram_stats rejects wrong input types at analysis time") {
     import spark.implicits._
-    NgramStats.register(spark)
+    graft.functions.registerAllFunctions(spark)
     val df = Seq(1).toDF("a")
     val ex = intercept[Exception] {
       df.select(expr("ngram_stats(a, 3)")).collect()

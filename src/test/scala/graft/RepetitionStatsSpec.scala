@@ -68,7 +68,7 @@ class RepetitionStatsSpec extends AnyFunSuite {
 
   test("raw stats: loop doc numbers are exactly right") {
     import spark.implicits._
-    graft.functions.RepetitionStats.register(spark)
+    graft.functions.registerAllFunctions(spark)
     // "lp qy " * 3 trimmed = "lp qy lp qy lp qy": 6 tokens, 17 chars.
     // 2-grams: "lp qy" x3 (glen 5), "qy lp" x2 (glen 5) -> winner key
     // 3*100000+5 -> mass 15. 3-grams: "lp qy lp" x2, "qy lp qy" x2, glen 8

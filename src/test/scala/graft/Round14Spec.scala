@@ -80,7 +80,7 @@ class Round14Spec extends AnyFunSuite {
 
   test("SimHash64 kernel is byte-identical to the relational 64-agg form") {
     import spark.implicits._
-    graft.functions.SimHash64.register(spark)
+    graft.functions.registerAllFunctions(spark)
     // fixture corpus + crafted edges: single token, duplicate tokens
     // (array_distinct semantics — votes once), empty text (split -> [""],
     // one empty-string token), and a token repeated across positions

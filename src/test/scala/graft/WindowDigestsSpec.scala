@@ -16,7 +16,7 @@ class WindowDigestsSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   private def both(docs: DataFrame, w: Int) = {
-    graft.functions.WindowDigests.register(spark)
+    graft.functions.registerAllFunctions(spark)
     def key(c: String) = docs
       .select(col("doc_id"), split(col("text"), " ").as("l"))
       .filter(size(col("l")) >= w)

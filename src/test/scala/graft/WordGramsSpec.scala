@@ -15,7 +15,7 @@ class WordGramsSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   private def both(docs: DataFrame): (Set[(Long, String)], Set[(Long, String)]) = {
-    graft.functions.WordGrams.register(spark)
+    graft.functions.registerAllFunctions(spark)
     def key(c: org.apache.spark.sql.Column) = docs
       .select(col("doc_id"), split(col("text"), " ").as("l"))
       .select(col("doc_id"), explode(c).as("g"))
