@@ -70,9 +70,8 @@ object GraphOps {
     * fixed round count is computed identically by both engines, so
     * the oracle match never depends on a convergence test (the
     * q_conncomp rule). Per round the work is linear in |E|; the edge
-    * list is the same small-parts co-purchase restriction as
-    * q_pagerank (p_size <= 10 keeps the per-order pair explode
-    * SF-linear) and each round's survivor set is localCheckpoint'd —
+    * list is q_pagerank's `CoPurchase.smallParts` and each round's
+    * survivor set is localCheckpoint'd —
     * a peeled level is referenced twice (degree pass + next level),
     * and without materialization the lineage doubles per round
     * (2^rounds recomputes; the recursive-CTE lesson). The oracle
@@ -85,25 +84,7 @@ object GraphOps {
       "q_kcore",
       (spark, dir) => {
         import spark.implicits._
-        val op = Tables.lineitem(spark, dir)
-          .join(Tables.part(spark, dir),
-            $"l_partkey" === $"p_partkey" && $"p_size" <= 10)
-          .select($"l_orderkey", $"l_partkey")
-          // r15: no .distinct() before the collect_set groupBy — the set
-          // agg dedups per order anyway; the distinct was a full extra
-          // shuffle of the (order, part) pairs for the same ps arrays.
-        val und = op.groupBy($"l_orderkey")
-          .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-          .filter(size($"ps") >= 2)
-          .select(explode(expr(
-            "flatten(transform(sequence(1, size(ps)-1), i -> " +
-              "transform(sequence(i+1, size(ps)), j -> " +
-              "struct(element_at(ps, i) as pa, element_at(ps, j) as pb))))"))
-            .as("pr"))
-          .select($"pr.pa".as("pa"), $"pr.pb".as("pb"))
-          .distinct()
-        var e = und.select($"pa".as("src"), $"pb".as("dst"))
-          .unionByName(und.select($"pb".as("src"), $"pa".as("dst")))
+        var e = CoPurchase.directed(CoPurchase.smallParts(spark, dir))
           .localCheckpoint()
         for (_ <- 1 to rounds) {
           val keep = e.groupBy($"src").agg(count(lit(1)).as("deg"))
@@ -128,14 +109,7 @@ object GraphOps {
              |    AND dst IN (SELECT v FROM k$i))""".stripMargin
         }.mkString(",\n")
         s"""
-        WITH op AS (
-          SELECT DISTINCT l_orderkey, l_partkey
-          FROM lineitem JOIN part
-            ON l_partkey = p_partkey AND p_size <= 10),
-        pairs AS (
-          SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-          FROM op a JOIN op b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+        WITH ${CoPurchase.smallPartsSql("pairs")},
         e0 AS MATERIALIZED (
           SELECT pa AS src, pb AS dst FROM pairs
           UNION ALL SELECT pb, pa FROM pairs),
@@ -241,26 +215,8 @@ object GraphOps {
       "q_bfs",
       (spark, dir) => {
         import spark.implicits._
-        val op = Tables.lineitem(spark, dir)
-          .join(Tables.part(spark, dir),
-            $"l_partkey" === $"p_partkey" && $"p_size" <= 10)
-          .select($"l_orderkey", $"l_partkey")
-          // r15: no .distinct() before the collect_set groupBy — the set
-          // agg dedups per order anyway; the distinct was a full extra
-          // shuffle of the (order, part) pairs for the same ps arrays.
-        val und = op.groupBy($"l_orderkey")
-          .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-          .filter(size($"ps") >= 2)
-          .select(explode(expr(
-            "flatten(transform(sequence(1, size(ps)-1), i -> " +
-              "transform(sequence(i+1, size(ps)), j -> " +
-              "struct(element_at(ps, i) as pa, element_at(ps, j) as pb))))"))
-            .as("pr"))
-          .select($"pr.pa".as("pa"), $"pr.pb".as("pb"))
-          .distinct()
-          .localCheckpoint()
-        val vs = und.select($"pa".as("v"))
-          .unionByName(und.select($"pb".as("v"))).distinct()
+        val und = CoPurchase.smallParts(spark, dir).localCheckpoint()
+        val vs = CoPurchase.vertices(und)
         val e = und.select($"pa".as("src"), $"pb".as("dst"), lit(1).as("w"))
           .unionByName(und.select($"pb".as("src"), $"pa".as("dst"),
             lit(1).as("w")))
@@ -287,14 +243,7 @@ object GraphOps {
              |  GROUP BY e.dst)""".stripMargin
         }.mkString(",\n")
         s"""
-        WITH op AS (
-          SELECT DISTINCT l_orderkey, l_partkey
-          FROM lineitem JOIN part
-            ON l_partkey = p_partkey AND p_size <= 10),
-        pairs AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-          FROM op a JOIN op b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+        WITH ${CoPurchase.smallPartsSql("pairs")},
         vs AS (SELECT DISTINCT v FROM (
                  SELECT pa AS v FROM pairs
                  UNION ALL SELECT pb FROM pairs) u),
@@ -331,34 +280,8 @@ object GraphOps {
       name,
       (spark, dir) => {
         import spark.implicits._
-        val op = Tables.lineitem(spark, dir)
-          .join(Tables.part(spark, dir),
-            $"l_partkey" === $"p_partkey" && $"p_size" <= 10)
-          .select($"l_orderkey", $"l_partkey")
-          // r15: no .distinct() before the collect_set groupBy — the set
-          // agg dedups per order anyway; the distinct was a full extra
-          // shuffle of the (order, part) pairs for the same ps arrays.
-        val und0 = op.groupBy($"l_orderkey")
-          .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-          .filter(size($"ps") >= 2)
-          .select(explode(expr(
-            "flatten(transform(sequence(1, size(ps)-1), i -> " +
-              "transform(sequence(i+1, size(ps)), j -> " +
-              "struct(element_at(ps, i) as pa, element_at(ps, j) as pb))))"))
-            .as("pr"))
-          .select($"pr.pa".as("pa"), $"pr.pb".as("pb"))
-          .distinct()
-        // ×expand replication (xdocs explode-of-sequence idiom): k
-        // disjoint copies, both endpoints shifted k·10,000,000, so each
-        // LPA round's join + count + argmax window moves 10× the rows.
-        val und =
-          if (expand <= 1) und0
-          else und0.select($"pa", $"pb",
-              explode(expr(s"sequence(0, ${expand - 1})")).as("k"))
-            .select(($"pa" + $"k".cast("long") * lit(10000000L)).as("pa"),
-              ($"pb" + $"k".cast("long") * lit(10000000L)).as("pb"))
-        val verts = und.select($"pa".as("v"))
-          .unionByName(und.select($"pb".as("v"))).distinct()
+        val und = CoPurchase.replicate(CoPurchase.smallParts(spark, dir), expand)
+        val (verts, e0) = CoPurchase.withSelfLoops(und)
         // r15 (guide §2.4, the mkPagerank idiom), ×10 twin only:
         // hash-partition the edge list on src BEFORE its checkpoint,
         // meant to keep it partitioned like the label side (which exits
@@ -368,9 +291,6 @@ object GraphOps {
         // the sorts. A/B: xxl 5.8 → 4.3-4.8 s; the 1× variant measured
         // ~0.3 s WORSE (the extra repartition of a small edge list costs
         // more than it saves), so the declared query keeps the r14 shape.
-        val e0 = und.select($"pa".as("src"), $"pb".as("dst"))
-          .unionByName(und.select($"pb".as("src"), $"pa".as("dst")))
-          .unionByName(verts.select($"v".as("src"), $"v".as("dst")))
         val e = (if (expand > 1)
             Parallel.spread(e0, $"src")
           else e0).localCheckpoint()
@@ -408,26 +328,9 @@ object GraphOps {
              |  WHERE rk = 1)""".stripMargin
         }.mkString(",\n")
         s"""
-        WITH op AS (
-          SELECT DISTINCT l_orderkey, l_partkey
-          FROM lineitem JOIN part
-            ON l_partkey = p_partkey AND p_size <= 10),
-        pairs0 AS (
-          SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-          FROM op a JOIN op b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        pairs AS (${
-          if (expand <= 1) "SELECT pa, pb FROM pairs0"
-          else
-            s"""SELECT pa + k * 10000000 AS pa, pb + k * 10000000 AS pb
-          FROM pairs0, unnest(generate_series(0, ${expand - 1})) AS xk(k)"""
-        }),
-        verts AS (
-          SELECT pa AS v FROM pairs UNION SELECT pb FROM pairs),
-        e AS MATERIALIZED (
-          SELECT pa AS src, pb AS dst FROM pairs
-          UNION ALL SELECT pb, pa FROM pairs
-          UNION ALL SELECT v, v FROM verts),
+        WITH ${CoPurchase.smallPartsSql("pairs0")},
+        pairs AS (${CoPurchase.replicateSql("pairs0", expand)}),
+        ${CoPurchase.withSelfLoopsSql("pairs")},
         l0 AS (SELECT v, v AS lbl FROM verts),
         $chain
         SELECT lbl AS community, cast(count(*) as int) AS n_members,
@@ -529,23 +432,7 @@ object GraphOps {
     "q_assortativity",
     (spark, dir) => {
       import spark.implicits._
-      val op = Tables.lineitem(spark, dir)
-        .join(Tables.part(spark, dir),
-          $"l_partkey" === $"p_partkey" && $"p_size" <= 10)
-        .select($"l_orderkey", $"l_partkey")
-        // r15: no .distinct() before the collect_set groupBy — the set
-        // agg dedups per order anyway; the distinct was a full extra
-        // shuffle of the (order, part) pairs for the same ps arrays.
-      val und = op.groupBy($"l_orderkey")
-        .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-        .filter(size($"ps") >= 2)
-        .select(explode(expr(
-          "flatten(transform(sequence(1, size(ps)-1), i -> " +
-            "transform(sequence(i+1, size(ps)), j -> " +
-            "struct(element_at(ps, i) as pa, element_at(ps, j) as pb))))"))
-          .as("pr"))
-        .select($"pr.pa".as("pa"), $"pr.pb".as("pb"))
-        .distinct()
+      val und = CoPurchase.smallParts(spark, dir)
       val deg = und.select($"pa".as("v"))
         .unionByName(und.select($"pb".as("v")))
         .groupBy($"v").agg(count(lit(1)).as("d"))
@@ -562,14 +449,7 @@ object GraphOps {
           .as("assortativity"))
     },
     Some(s"""
-      WITH op AS (
-        SELECT DISTINCT l_orderkey, l_partkey
-        FROM lineitem JOIN part
-          ON l_partkey = p_partkey AND p_size <= 10),
-      und AS (
-        SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM op a JOIN op b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+      WITH ${CoPurchase.smallPartsSql("und")},
       deg AS (
         SELECT v, count(*) AS d FROM (
           SELECT pa AS v FROM und UNION ALL SELECT pb FROM und) t
@@ -605,30 +485,9 @@ object GraphOps {
       "q_modularity",
       (spark, dir) => {
         import spark.implicits._
-        val op = Tables.lineitem(spark, dir)
-          .join(Tables.part(spark, dir),
-            $"l_partkey" === $"p_partkey" && $"p_size" <= 10)
-          .select($"l_orderkey", $"l_partkey")
-          // r15: no .distinct() before the collect_set groupBy — the set
-          // agg dedups per order anyway; the distinct was a full extra
-          // shuffle of the (order, part) pairs for the same ps arrays.
-        val und = op.groupBy($"l_orderkey")
-          .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-          .filter(size($"ps") >= 2)
-          .select(explode(expr(
-            "flatten(transform(sequence(1, size(ps)-1), i -> " +
-              "transform(sequence(i+1, size(ps)), j -> " +
-              "struct(element_at(ps, i) as pa, element_at(ps, j) as pb))))"))
-            .as("pr"))
-          .select($"pr.pa".as("pa"), $"pr.pb".as("pb"))
-          .distinct()
-          .localCheckpoint()
-        val verts = und.select($"pa".as("v"))
-          .unionByName(und.select($"pb".as("v"))).distinct()
-        val e = und.select($"pa".as("src"), $"pb".as("dst"))
-          .unionByName(und.select($"pb".as("src"), $"pa".as("dst")))
-          .unionByName(verts.select($"v".as("src"), $"v".as("dst")))
-          .localCheckpoint()
+        val und = CoPurchase.smallParts(spark, dir).localCheckpoint()
+        val (verts, e0) = CoPurchase.withSelfLoops(und)
+        val e = e0.localCheckpoint()
         // in-loop labels are single-reference (no checkpoints, the q_lpa
         // rule); the FINAL labels feed three consumers (degree sum + both
         // endpoint joins), so only that table materializes
@@ -678,20 +537,8 @@ object GraphOps {
              |  WHERE rk = 1)""".stripMargin
         }.mkString(",\n")
         s"""
-        WITH op AS (
-          SELECT DISTINCT l_orderkey, l_partkey
-          FROM lineitem JOIN part
-            ON l_partkey = p_partkey AND p_size <= 10),
-        pairs AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-          FROM op a JOIN op b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        verts AS (
-          SELECT pa AS v FROM pairs UNION SELECT pb FROM pairs),
-        e AS MATERIALIZED (
-          SELECT pa AS src, pb AS dst FROM pairs
-          UNION ALL SELECT pb, pa FROM pairs
-          UNION ALL SELECT v, v FROM verts),
+        WITH ${CoPurchase.smallPartsSql("pairs")},
+        ${CoPurchase.withSelfLoopsSql("pairs")},
         l0 AS (SELECT v, v AS lbl FROM verts),
         $chain,
         mm AS (SELECT cast(count(*) as bigint) AS m FROM pairs),
@@ -734,26 +581,8 @@ object GraphOps {
     "q_2hop",
     (spark, dir) => {
       import spark.implicits._
-      val op = Tables.lineitem(spark, dir)
-        .join(Tables.part(spark, dir),
-          $"l_partkey" === $"p_partkey" && $"p_size" <= 10)
-        .select($"l_orderkey", $"l_partkey")
-        // r15: no .distinct() before the collect_set groupBy — the set
-        // agg dedups per order anyway; the distinct was a full extra
-        // shuffle of the (order, part) pairs for the same ps arrays.
-      val und = op.groupBy($"l_orderkey")
-        .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-        .filter(size($"ps") >= 2)
-        .select(explode(expr(
-          "flatten(transform(sequence(1, size(ps)-1), i -> " +
-            "transform(sequence(i+1, size(ps)), j -> " +
-            "struct(element_at(ps, i) as pa, element_at(ps, j) as pb))))"))
-          .as("pr"))
-        .select($"pr.pa".as("pa"), $"pr.pb".as("pb"))
-        .distinct()
-      val e = und.select($"pa".as("src"), $"pb".as("dst"))
-        .unionByName(und.select($"pb".as("src"), $"pa".as("dst")))
-        .localCheckpoint()
+      val und = CoPurchase.smallParts(spark, dir)
+      val e = CoPurchase.directed(und).localCheckpoint()
       val two = e.as("a").join(e.as("b"), col("a.dst") === col("b.src"))
         .select(col("a.src").as("src"), col("b.dst").as("dst"))
         .filter($"src" =!= $"dst")
@@ -769,14 +598,7 @@ object GraphOps {
         .orderBy($"node")
     },
     Some(s"""
-      WITH op AS (
-        SELECT DISTINCT l_orderkey, l_partkey
-        FROM lineitem JOIN part
-          ON l_partkey = p_partkey AND p_size <= 10),
-      und AS (
-        SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM op a JOIN op b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+      WITH ${CoPurchase.smallPartsSql("und")},
       e AS MATERIALIZED (
         SELECT pa AS src, pb AS dst FROM und
         UNION ALL SELECT pb, pa FROM und),
@@ -892,26 +714,8 @@ object GraphOps {
       "q_closeness",
       (spark, dir) => {
         import spark.implicits._
-        val op = Tables.lineitem(spark, dir)
-          .join(Tables.part(spark, dir),
-            $"l_partkey" === $"p_partkey" && $"p_size" <= 10)
-          .select($"l_orderkey", $"l_partkey")
-          // r15: no .distinct() before the collect_set groupBy — the set
-          // agg dedups per order anyway; the distinct was a full extra
-          // shuffle of the (order, part) pairs for the same ps arrays.
-        val und = op.groupBy($"l_orderkey")
-          .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-          .filter(size($"ps") >= 2)
-          .select(explode(expr(
-            "flatten(transform(sequence(1, size(ps)-1), i -> " +
-              "transform(sequence(i+1, size(ps)), j -> " +
-              "struct(element_at(ps, i) as pa, element_at(ps, j) as pb))))"))
-            .as("pr"))
-          .select($"pr.pa".as("pa"), $"pr.pb".as("pb"))
-          .distinct()
-          .localCheckpoint()
-        val vs = und.select($"pa".as("v"))
-          .unionByName(und.select($"pb".as("v"))).distinct()
+        val und = CoPurchase.smallParts(spark, dir).localCheckpoint()
+        val vs = CoPurchase.vertices(und)
         val e = und.select($"pa".as("src"), $"pb".as("dst"), lit(1).as("w"))
           .unionByName(und.select($"pb".as("src"), $"pa".as("dst"),
             lit(1).as("w")))
@@ -943,14 +747,7 @@ object GraphOps {
              |  GROUP BY dp.seed, e.dst)""".stripMargin
         }.mkString(",\n")
         s"""
-        WITH op AS (
-          SELECT DISTINCT l_orderkey, l_partkey
-          FROM lineitem JOIN part
-            ON l_partkey = p_partkey AND p_size <= 10),
-        pairs AS MATERIALIZED (
-          SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-          FROM op a JOIN op b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+        WITH ${CoPurchase.smallPartsSql("pairs")},
         vs AS (SELECT DISTINCT v FROM (
                  SELECT pa AS v FROM pairs
                  UNION ALL SELECT pb FROM pairs) u),
@@ -1043,25 +840,7 @@ object GraphOps {
       "q_katz",
       (spark, dir) => {
         import spark.implicits._
-        val op = Tables.lineitem(spark, dir)
-          .join(Tables.part(spark, dir).filter($"p_size" <= 10)
-            .select($"p_partkey"), $"l_partkey" === $"p_partkey")
-          .select($"l_orderkey", $"l_partkey")
-          // r15: no .distinct() before the collect_set groupBy — the set
-          // agg dedups per order anyway; the distinct was a full extra
-          // shuffle of the (order, part) pairs for the same ps arrays.
-        val pr = op
-          .groupBy($"l_orderkey")
-          .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-          .filter(size($"ps") >= 2)
-          .select(explode(expr(
-            "flatten(transform(sequence(1, size(ps)-1), i -> " +
-              "transform(sequence(i+1, size(ps)), j -> " +
-              "struct(element_at(ps, i) as p1, element_at(ps, j) as p2))))"))
-            .as("pr"))
-          .select($"pr.p1".as("p1"), $"pr.p2".as("p2")).distinct()
-        val e = pr.select($"p1".as("src"), $"p2".as("dst"))
-          .unionByName(pr.select($"p2".as("src"), $"p1".as("dst")))
+        val e = CoPurchase.directed(CoPurchase.smallParts(spark, dir))
           .localCheckpoint()
         val nodes = e.select($"src".as("node")).distinct()
         var x = nodes.withColumn("x", lit(1.0))
@@ -1092,17 +871,11 @@ object GraphOps {
              |    GROUP BY dst) s ON n.node = s.dst)""".stripMargin
         }.mkString(",\n")
         s"""
-        WITH op AS (SELECT DISTINCT l_orderkey, l_partkey
-                    FROM lineitem JOIN part ON l_partkey = p_partkey
-                    WHERE p_size <= 10),
-        pr AS (
-          SELECT DISTINCT a.l_partkey AS p1, b.l_partkey AS p2
-          FROM op a JOIN op b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+        WITH ${CoPurchase.smallPartsSql("pr")},
         e AS MATERIALIZED (
-          SELECT p1 AS src, p2 AS dst FROM pr
+          SELECT pa AS src, pb AS dst FROM pr
           UNION ALL
-          SELECT p2 AS src, p1 AS dst FROM pr),
+          SELECT pb AS src, pa AS dst FROM pr),
         nodes AS (SELECT DISTINCT src AS node FROM e),
         x0 AS (SELECT node, cast(1.0 as double) AS x FROM nodes),
         $chain

@@ -8,14 +8,12 @@ import graft.engine.{GQuery, Tables}
 import graft.engine.GQuery._
 
 /** Graph link prediction and structure profiling over the co-purchase
-  * graph (the q_triangles edge list: support ≥ 2 part pairs + the
-  * planted 4-clique), plus the interval-union sweep over the event
-  * stream. The graph queries never materialize part×part: the edge
-  * list uses q_copurchase's single-shuffle per-order pair explode (one
-  * groupBy of the fact — the lp self-join shuffles the pair table
-  * twice), wedges come from the degree-bounded sparse edge list, and
+  * graph (`CoPurchase.supported`, the q_triangles edge list: support ≥ 2
+  * part pairs + the planted 4-clique), plus the interval-union sweep
+  * over the event stream. The graph queries never materialize
+  * part×part: wedges come from the degree-bounded sparse edge list and
   * candidates only from equi-joins — the same scale posture as
-  * q_triangles/q_conncomp (whose oracles pin the identical edge set).
+  * q_triangles/q_conncomp.
   */
 object LinkOps {
 
@@ -33,25 +31,8 @@ object LinkOps {
     "q_adamic_adar",
     (spark, dir) => {
       import spark.implicits._
-      val organic = Tables.lineitem(spark, dir)
-        .groupBy($"l_orderkey")
-        .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-        .filter(size($"ps") >= 2)
-        .select(explode(expr(
-          "flatten(transform(sequence(1, size(ps)-1), i -> " +
-            "transform(sequence(i+1, size(ps)), j -> " +
-            "struct(element_at(ps, i) as pa, element_at(ps, j) as pb))))"))
-          .as("pr"))
-        .groupBy($"pr.pa".as("pa"), $"pr.pb".as("pb"))
-        .agg(count(lit(1)).as("s"))
-        .filter($"s" >= 2)
-        .select($"pa", $"pb")
-      val k4 = Seq(9000001L, 9000002L, 9000003L, 9000004L)
-      val planted = k4.combinations(2).map { case Seq(x, y) => (x, y) }
-        .toSeq.toDF("pa", "pb")
-      val e = organic.unionByName(planted).localCheckpoint()
-      val und = e.select($"pa".as("src"), $"pb".as("dst"))
-        .unionByName(e.select($"pb".as("src"), $"pa".as("dst")))
+      val e = CoPurchase.supported(spark, dir).localCheckpoint()
+      val und = CoPurchase.directed(e)
       val deg = und.groupBy($"src".as("z")).agg(count(lit(1)).as("deg"))
       val wedges = und.as("l").join(und.as("r"),
           col("l.dst") === col("r.src") && col("l.src") < col("r.dst"))
@@ -69,18 +50,7 @@ object LinkOps {
         .limit(15)
     },
     Some(s"""
-      WITH lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-      organic AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM lp a JOIN lp b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING count(*) >= 2),
-      planted AS (
-        SELECT cast(pa as bigint) AS pa, cast(pb as bigint) AS pb
-        FROM (VALUES (9000001, 9000002), (9000001, 9000003),
-                     (9000001, 9000004), (9000002, 9000003),
-                     (9000002, 9000004), (9000003, 9000004)) v(pa, pb)),
-      e AS (SELECT pa, pb FROM organic UNION ALL SELECT pa, pb FROM planted),
+      WITH ${CoPurchase.supportedSql("e")},
       und AS (SELECT pa AS src, pb AS dst FROM e
               UNION ALL SELECT pb AS src, pa AS dst FROM e),
       deg AS (SELECT src AS z, count(*) AS deg FROM und GROUP BY src),
@@ -116,23 +86,7 @@ object LinkOps {
     "q_degree_dist",
     (spark, dir) => {
       import spark.implicits._
-      val organic = Tables.lineitem(spark, dir)
-        .groupBy($"l_orderkey")
-        .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-        .filter(size($"ps") >= 2)
-        .select(explode(expr(
-          "flatten(transform(sequence(1, size(ps)-1), i -> " +
-            "transform(sequence(i+1, size(ps)), j -> " +
-            "struct(element_at(ps, i) as pa, element_at(ps, j) as pb))))"))
-          .as("pr"))
-        .groupBy($"pr.pa".as("pa"), $"pr.pb".as("pb"))
-        .agg(count(lit(1)).as("s"))
-        .filter($"s" >= 2)
-        .select($"pa", $"pb")
-      val k4 = Seq(9000001L, 9000002L, 9000003L, 9000004L)
-      val planted = k4.combinations(2).map { case Seq(x, y) => (x, y) }
-        .toSeq.toDF("pa", "pb")
-      val e = organic.unionByName(planted)
+      val e = CoPurchase.supported(spark, dir)
       val und = e.select($"pa".as("v")).unionByName(e.select($"pb".as("v")))
       val hist = und.groupBy($"v").agg(count(lit(1)).as("degree"))
         .groupBy($"degree").agg(count(lit(1)).as("n_vertices"))
@@ -152,18 +106,7 @@ object LinkOps {
         .orderBy($"degree")
     },
     Some(s"""
-      WITH lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-      organic AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM lp a JOIN lp b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING count(*) >= 2),
-      planted AS (
-        SELECT cast(pa as bigint) AS pa, cast(pb as bigint) AS pb
-        FROM (VALUES (9000001, 9000002), (9000001, 9000003),
-                     (9000001, 9000004), (9000002, 9000003),
-                     (9000002, 9000004), (9000003, 9000004)) v(pa, pb)),
-      e AS (SELECT pa, pb FROM organic UNION ALL SELECT pa, pb FROM planted),
+      WITH ${CoPurchase.supportedSql("e")},
       und AS (SELECT pa AS v FROM e UNION ALL SELECT pb AS v FROM e),
       hist AS (
         SELECT degree, count(*) AS n_vertices FROM (
@@ -269,25 +212,8 @@ object LinkOps {
     "q_link_jaccard",
     (spark, dir) => {
       import spark.implicits._
-      val organic = Tables.lineitem(spark, dir)
-        .groupBy($"l_orderkey")
-        .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-        .filter(size($"ps") >= 2)
-        .select(explode(expr(
-          "flatten(transform(sequence(1, size(ps)-1), i -> " +
-            "transform(sequence(i+1, size(ps)), j -> " +
-            "struct(element_at(ps, i) as pa, element_at(ps, j) as pb))))"))
-          .as("pr"))
-        .groupBy($"pr.pa".as("pa"), $"pr.pb".as("pb"))
-        .agg(count(lit(1)).as("s"))
-        .filter($"s" >= 2)
-        .select($"pa", $"pb")
-      val k4 = Seq(9000001L, 9000002L, 9000003L, 9000004L)
-      val planted = k4.combinations(2).map { case Seq(x, y) => (x, y) }
-        .toSeq.toDF("pa", "pb")
-      val e = organic.unionByName(planted).localCheckpoint()
-      val und = e.select($"pa".as("src"), $"pb".as("dst"))
-        .unionByName(e.select($"pb".as("src"), $"pa".as("dst")))
+      val e = CoPurchase.supported(spark, dir).localCheckpoint()
+      val und = CoPurchase.directed(e)
       val deg = und.groupBy($"src".as("z")).agg(count(lit(1)).as("deg"))
       val wedges = und.as("l").join(und.as("r"),
           col("l.dst") === col("r.src") && col("l.src") < col("r.dst"))
@@ -306,18 +232,7 @@ object LinkOps {
         .limit(15)
     },
     Some(s"""
-      WITH lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-      organic AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM lp a JOIN lp b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING count(*) >= 2),
-      planted AS (
-        SELECT cast(pa as bigint) AS pa, cast(pb as bigint) AS pb
-        FROM (VALUES (9000001, 9000002), (9000001, 9000003),
-                     (9000001, 9000004), (9000002, 9000003),
-                     (9000002, 9000004), (9000003, 9000004)) v(pa, pb)),
-      e AS (SELECT pa, pb FROM organic UNION ALL SELECT pa, pb FROM planted),
+      WITH ${CoPurchase.supportedSql("e")},
       und AS (SELECT pa AS src, pb AS dst FROM e
               UNION ALL SELECT pb AS src, pa AS dst FROM e),
       deg AS (SELECT src AS z, count(*) AS deg FROM und GROUP BY src),

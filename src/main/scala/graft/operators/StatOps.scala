@@ -236,33 +236,19 @@ object StatOps {
   )
 
   /** Triangle counting over the co-purchase graph: edges are part pairs
-    * co-purchased in ≥ 2 distinct orders (the same order-key-bounded
-    * pair generation as q_copurchase — fan-out is lines-per-order, never
+    * co-purchased in ≥ 2 distinct orders plus a planted 4-clique
+    * (`CoPurchase.supported` — fan-out is lines-per-order, never
     * part×part), stored once per pair as (a < b); triangles close via
     * two equi-joins on the canonical orientation (a<b<c visits each
     * triangle exactly once). The support floor is what bounds the edge
-    * list (1.2M raw pairs → 3.6k edges at sf0.1); at 1000× add degree-
-    * ordered orientation so no high-degree vertex anchors a quadratic
-    * wedge set — the join shape is unchanged. A planted 4-clique on
-    * synthetic part ids keeps the output non-vacuous at every SF (the
-    * shifted-union convention of the dedup queries). */
+    * list; at 1000× add degree-ordered orientation so no high-degree
+    * vertex anchors a quadratic wedge set — the join shape is
+    * unchanged. */
   val qTriangles: GQuery = GQuery(
     "q_triangles",
     (spark, dir) => {
       import spark.implicits._
-      val lp = Tables.lineitem(spark, dir)
-        .select($"l_orderkey", $"l_partkey").distinct()
-      val organic = lp.as("a").join(lp.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .groupBy(col("a.l_partkey").as("pa"), col("b.l_partkey").as("pb"))
-        .agg(count(lit(1)).as("s"))
-        .filter($"s" >= 2)
-        .select($"pa", $"pb")
-      val k4 = Seq(9000001L, 9000002L, 9000003L, 9000004L)
-      val planted = k4.combinations(2).map { case Seq(x, y) => (x, y) }
-        .toSeq.toDF("pa", "pb")
-      val e = organic.unionByName(planted)
+      val e = CoPurchase.supported(spark, dir)
       e.as("x").join(e.as("y"), col("x.pb") === col("y.pa"))
         .join(e.as("z"),
           col("z.pa") === col("x.pa") && col("z.pb") === col("y.pb"))
@@ -270,19 +256,8 @@ object StatOps {
           col("y.pb").as("c"))
         .orderBy($"a", $"b", $"c")
     },
-    Some("""
-      WITH lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-      organic AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM lp a JOIN lp b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING count(*) >= 2),
-      planted AS (
-        SELECT cast(pa as bigint) AS pa, cast(pb as bigint) AS pb
-        FROM (VALUES (9000001, 9000002), (9000001, 9000003),
-                     (9000001, 9000004), (9000002, 9000003),
-                     (9000002, 9000004), (9000003, 9000004)) v(pa, pb)),
-      e AS (SELECT pa, pb FROM organic UNION ALL SELECT pa, pb FROM planted)
+    Some(s"""
+      WITH ${CoPurchase.supportedSql("e")}
       SELECT x.pa AS a, x.pb AS b, y.pb AS c
       FROM e x JOIN e y ON x.pb = y.pa
                JOIN e z ON z.pa = x.pa AND z.pb = y.pb
@@ -312,37 +287,13 @@ object StatOps {
       name,
       (spark, dir) => {
         import spark.implicits._
-        val lp = Tables.lineitem(spark, dir)
-          .select($"l_orderkey", $"l_partkey").distinct()
-        val organic = lp.as("a").join(lp.as("b"),
-            col("a.l_orderkey") === col("b.l_orderkey") &&
-              col("a.l_partkey") < col("b.l_partkey"))
-          .groupBy(col("a.l_partkey").as("pa"), col("b.l_partkey").as("pb"))
-          .agg(count(lit(1)).as("s"))
-          .filter($"s" >= 2)
-          .select($"pa", $"pb")
-        val k4 = Seq(9000001L, 9000002L, 9000003L, 9000004L)
-        val planted = k4.combinations(2).map { case Seq(x, y) => (x, y) }
-          .toSeq.toDF("pa", "pb")
-        // ×expand replication (the xdocs explode-of-sequence idiom, no
-        // cross join): k disjoint copies with both endpoints shifted by
-        // k·10,000,000 — clear of the 9,000,00x planted clique — so each
-        // of the 8 label-propagation iterations joins 10× the edges.
-        val und0 = organic.unionByName(planted)
-        val undX =
-          if (expand <= 1) und0
-          else und0.select($"pa", $"pb",
-              explode(expr(s"sequence(0, ${expand - 1})")).as("k"))
-            .select(($"pa" + $"k".cast("long") * lit(10000000L)).as("pa"),
-              ($"pb" + $"k".cast("long") * lit(10000000L)).as("pb"))
+        val undX = CoPurchase.replicate(CoPurchase.supported(spark, dir), expand)
         // Checkpoint the UNDIRECTED edge list itself, not a derivative:
         // both the expanded edge list AND l0's vertex set hang off `und`,
-        // so checkpointing only `e` left l0 re-evaluating the lineitem
-        // self-join a second time inside the final 8-join query
+        // so checkpointing only `e` left l0 re-evaluating the edge-list
+        // build a second time inside the final 8-join query
         // (measured ~1s of the 4s warm runtime at sf0.1).
         val und = undX.localCheckpoint()
-        val vs = und.select($"pa".as("v"))
-          .unionByName(und.select($"pb".as("v"))).distinct()
         // undirected edges + self-loops: min over in-neighbors ∪ self
         // e is referenced by all 8 iterations — checkpoint it as well (off
         // the cheap checkpointed und, this job is milliseconds) so the
@@ -356,9 +307,7 @@ object StatOps {
         // (small) label side avoids SMJ sorts. A/B at 1× measured
         // ~0.3-0.5 s WORSE (the repartition of a small edge list costs
         // more than it saves), so the declared query keeps the r14 shape.
-        val e0 = und.select($"pa".as("src"), $"pb".as("dst"))
-          .unionByName(und.select($"pb".as("src"), $"pa".as("dst")))
-          .unionByName(vs.select($"v".as("src"), $"v".as("dst")))
+        val (vs, e0) = CoPurchase.withSelfLoops(und)
         val e = (if (expand > 1)
             Parallel.spread(e0, $"src")
           else e0).localCheckpoint()
@@ -382,32 +331,10 @@ object StatOps {
              |  GROUP BY e.dst)""".stripMargin
         }.mkString(",\n")
         s"""
-        WITH lpx AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        organic AS (
-          SELECT a.l_partkey AS pa, b.l_partkey AS pb
-          FROM lpx a JOIN lpx b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          GROUP BY 1, 2 HAVING count(*) >= 2),
-        planted AS (
-          SELECT cast(pa as bigint) AS pa, cast(pb as bigint) AS pb
-          FROM (VALUES (9000001, 9000002), (9000001, 9000003),
-                       (9000001, 9000004), (9000002, 9000003),
-                       (9000002, 9000004), (9000003, 9000004)) v(pa, pb)),
-        und0 AS (SELECT pa, pb FROM organic
-                UNION ALL SELECT pa, pb FROM planted),
-        und AS (${
-          if (expand <= 1) "SELECT pa, pb FROM und0"
-          else
-            s"""SELECT pa + k * 10000000 AS pa, pb + k * 10000000 AS pb
-          FROM und0, unnest(generate_series(0, ${expand - 1})) AS xk(k)"""
-        }),
-        vs AS (SELECT DISTINCT v FROM (
-                 SELECT pa AS v FROM und UNION ALL SELECT pb FROM und) u),
-        e AS MATERIALIZED (
-              SELECT pa AS src, pb AS dst FROM und
-              UNION ALL SELECT pb, pa FROM und
-              UNION ALL SELECT v, v FROM vs),
-        l0 AS (SELECT v AS node, v AS lbl FROM vs),
+        WITH ${CoPurchase.supportedSql("und0")},
+        und AS (${CoPurchase.replicateSql("und0", expand)}),
+        ${CoPurchase.withSelfLoopsSql("und")},
+        l0 AS (SELECT v AS node, v AS lbl FROM verts),
         $steps
         SELECT lbl AS component, count(*) AS n_nodes
         FROM l$iters
@@ -751,19 +678,7 @@ object StatOps {
     "q_clustering_coef",
     (spark, dir) => {
       import spark.implicits._
-      val lp = Tables.lineitem(spark, dir)
-        .select($"l_orderkey", $"l_partkey").distinct()
-      val organic = lp.as("a").join(lp.as("b"),
-          col("a.l_orderkey") === col("b.l_orderkey") &&
-            col("a.l_partkey") < col("b.l_partkey"))
-        .groupBy(col("a.l_partkey").as("pa"), col("b.l_partkey").as("pb"))
-        .agg(count(lit(1)).as("s"))
-        .filter($"s" >= 2)
-        .select($"pa", $"pb")
-      val k4 = Seq(9000001L, 9000002L, 9000003L, 9000004L)
-      val planted = k4.combinations(2).map { case Seq(x, y) => (x, y) }
-        .toSeq.toDF("pa", "pb")
-      val e = organic.unionByName(planted).localCheckpoint()
+      val e = CoPurchase.supported(spark, dir).localCheckpoint()
       val tri = e.as("x").join(e.as("y"), col("x.pb") === col("y.pa"))
         .join(e.as("z"),
           col("z.pa") === col("x.pa") && col("z.pb") === col("y.pb"))
@@ -779,19 +694,7 @@ object StatOps {
             .as("clustering_coef"))
     },
     Some(s"""
-      WITH lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-      organic AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM lp a JOIN lp b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING count(*) >= 2),
-      planted AS (
-        SELECT cast(pa as bigint) AS pa, cast(pb as bigint) AS pb
-        FROM (VALUES (9000001, 9000002), (9000001, 9000003),
-                     (9000001, 9000004), (9000002, 9000003),
-                     (9000002, 9000004), (9000003, 9000004)) v(pa, pb)),
-      e AS MATERIALIZED (
-        SELECT pa, pb FROM organic UNION ALL SELECT pa, pb FROM planted),
+      WITH ${CoPurchase.supportedSql("e")},
       tri AS (
         SELECT cast(count(*) as bigint) AS t
         FROM e x JOIN e y ON x.pb = y.pa

@@ -2,13 +2,20 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+
 import graft.engine.{Registry, Sessions}
 
 /** Dump formatted physical plans for headline queries → PLANS.md, the
   * reviewable record that scans prune/push down, dims broadcast, fact
   * joins sort-merge, and top-k avoids global sorts. Query names after the
   * output file dump only those plans (before/after evidence for a plan
-  * change). Run:
+  * change). Each query is built under its own name as the Spark call
+  * site, so a checkpoint scan reads `MapPartitionsRDD[<id>] at q_x`
+  * rather than the source line of the `localCheckpoint` call, and an
+  * edit that only moves lines leaves the dump unchanged;
+  * `tools/plan_diff.py a.md b.md` compares two dumps. Run:
   *   sbt "runMain graft.tools.ExplainAll /root/testdata/sf0.01 PLANS.md"
   *   sbt "runMain graft.tools.ExplainAll <sfDir> before.md q_a q_b"
   */
@@ -165,6 +172,16 @@ object ExplainAll {
     "q_phrase_search_xl", "q_bpe_train_topk", "q_pagerank_xxl",
     "q_pca_power", "q_kmeans_lloyd")
 
+  /** The formatted physical plan of query `name` on `sf`, built with
+    * `name` as the call site of every RDD the build creates. */
+  def plan(spark: SparkSession, sf: String, name: String): String = {
+    val sc = spark.sparkContext
+    sc.setCallSite(name)
+    try Registry.byName(name).run(spark, sf).queryExecution
+      .explainString(FormattedMode)
+    finally sc.clearCallSite()
+  }
+
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.drop(1).headOption.getOrElse("PLANS.md")
@@ -187,10 +204,7 @@ object ExplainAll {
     sb.append("edges, `TakeOrderedAndProject` for top-k, paired partial/final\n")
     sb.append("`HashAggregate` around each exchange.\n")
     names.foreach { name =>
-      val df = Registry.byName(name).run(spark, sf)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n```\n$plan```\n")
+      sb.append(s"\n## $name\n\n```\n${plan(spark, sf, name)}```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out (${names.size} plans)")

@@ -140,6 +140,19 @@ class ContractSpec extends AnyFunSuite {
         hits.mkString("\n"))
   }
 
+  // One co-purchase graph: operators.CoPurchase owns the pair explode, the
+  // planted clique and the DuckDB pair join; a graph query takes its edge
+  // list from there and never re-derives it in either engine.
+  test("contract guard: only CoPurchase builds the co-purchase graph") {
+    val hits = linesContaining("src/main/scala/graft/operators",
+        Seq("transform(sequence(i+1, size(ps))", "9000001",
+          "a.l_orderkey = b.l_orderkey"))
+      .filterNot(_.contains("/CoPurchase.scala:"))
+    assert(hits.isEmpty,
+      s"take the edge list from graft.operators.CoPurchase, not at:\n" +
+        hits.mkString("\n"))
+  }
+
   /** `file:line` of every line under `dir`'s Scala sources that contains
     * one of `needles`. */
   private def linesContaining(dir: String, needles: Seq[String]): List[String] =

@@ -124,14 +124,7 @@ class GraphMetricSpec extends AnyFunSuite {
     // lesson applied to the graph family). Threshold: max degree <= 64
     // (measured <= ~20 at every current SF).
     import spark.implicits._
-    val lp = Tables.lineitem(spark, sf)
-      .select($"l_orderkey", $"l_partkey").distinct()
-    val e = lp.as("a").join(lp.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .groupBy(col("a.l_partkey").as("pa"), col("b.l_partkey").as("pb"))
-      .agg(count(lit(1)).as("s"))
-      .filter($"s" >= 2)
+    val e = graft.operators.CoPurchase.supported(spark, sf)
     val deg = e.select($"pa".as("v")).unionByName(e.select($"pb".as("v")))
       .groupBy($"v").agg(count(lit(1)).as("d"))
     val maxDeg = deg.agg(max($"d")).head.getLong(0)

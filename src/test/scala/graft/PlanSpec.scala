@@ -410,4 +410,14 @@ class PlanSpec extends AnyFunSuite {
       assert(pushed.get.contains("GreaterThanOrEqual(value"), pushed.get)
     } finally spark.conf.set("spark.sql.maxMetadataStringLength", prev)
   }
+
+  test("ExplainAll names checkpoint scans after the query, not a source line") {
+    // q_kcore's edge list and peeled levels are localCheckpoint'd; an RDD
+    // call site of `<File>.scala:<line>` would make a dump change when an
+    // edit only moves lines
+    val plan = graft.tools.ExplainAll.plan(spark, sf, "q_kcore")
+    assert(plan.contains("RDD["), plan)
+    assert(!plan.contains(".scala:"), plan)
+    assert(plan.contains(" at q_kcore"), plan)
+  }
 }
